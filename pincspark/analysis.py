@@ -1,22 +1,24 @@
 """The reference's flagship batch analysis (ais_analysis.py:main, 308-498)
 as one composed Spark pipeline:
 
-    archive text -> validate/reassemble -> decode -> position & static
-    frames -> as-of join per mmsi -> gold parquet -> zone spatial join ->
-    distinct-vessel occupancy
+    archive text -> validate/reassemble -> decode -> as-of gold per mmsi
+    -> gold parquet -> zone spatial join -> distinct-vessel occupancy
 
 Stage-for-stage parity with SURVEY §3.1; every hop is one of the engine's
 operators, so the whole job is: scan -> narrow decode -> ONE shuffle on
 mmsi (as-of) -> broadcast zone predicate -> low-card agg. At 100 TB the
 only wide exchange is the mmsi shuffle, which AQE skew-handles.
 
-The decoded frame is staged (eager localCheckpoint inside
-``read_and_decode``) before the position/static fan-out: the gold DAG
-consumes it three times (positions + the t5/t24 static union), and without
-staging Spark re-scans the archive and re-runs the Python decode once per
-consumer — the reference reads the day file once (ais_analysis.py:318-321),
-and so does this pipeline (exactly 1 FileScan + 1 ArrowEvalPython across
-the whole flagship, asserted in tests/test_plans.py).
+The gold table has ONE builder, :func:`build_gold_fused`: a single narrow
+projection over the decoded frame feeding the shared as-of window
+(:func:`pincspark.operators.asof.carry_forward`), so ``decoded`` has one
+consumer. Staging is the one ``pincspark.staging.stage`` path: the
+reassembly's validated frame is staged once (its three consumers), and the
+decoded frame is staged only when the two RETURNED lazy frames share it
+(no ``gold_path``). Either way the flagship executes exactly 1 FileScan +
+1 ArrowEvalPython (asserted in tests/test_plans.py through
+``planhooks.capture_staged_plans``) — the reference reads the day file
+once too (ais_analysis.py:318-321).
 """
 
 from __future__ import annotations
@@ -24,82 +26,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pincspark.operators.asof import asof_join
-from pincspark.operators.geo import spatial_join
+from pincspark.operators.asof import carry_forward
+from pincspark.operators.geo import zone_occupancy
 from pincspark.sources.nmea_source import read_and_decode
 
 STATIC_COLS = ["shipName", "shipType", "callsign", "destination", "draught"]
 
 
-def position_frame(decoded: DataFrame) -> DataFrame:
-    """Types 1/2/3 -> the position analytic frame
-    (ais_analysis_polars.py:391-401)."""
-    return decoded.filter(F.col("ais.messageType").isin(1, 2, 3)).select(
-        "ts",
-        F.col("ais.messageType").alias("messageType"),
-        F.col("ais.mmsi").alias("mmsi"),
-        "ais.position.*",
-    )
-
-
-def static_frame(decoded: DataFrame) -> DataFrame:
-    """Types 5 and 24 normalized into one static frame
-    (ais_analysis_polars.py:361-374; msg-24 part A carries shipName, part B
-    shipType/callsign — absent columns null-filled, P24 semantics)."""
-    t5 = decoded.filter(F.col("ais.messageType") == 5).select(
-        "ts",
-        F.col("ais.messageType").alias("messageType"),
-        F.col("ais.mmsi").alias("mmsi"),
-        F.col("ais.static_voyage.shipName").alias("shipName"),
-        F.col("ais.static_voyage.shipType").alias("shipType"),
-        F.col("ais.static_voyage.callsign").alias("callsign"),
-        F.col("ais.static_voyage.destination").alias("destination"),
-        F.col("ais.static_voyage.draught").alias("draught"),
-    )
-    t24 = decoded.filter(F.col("ais.messageType") == 24).select(
-        "ts",
-        F.col("ais.messageType").alias("messageType"),
-        F.col("ais.mmsi").alias("mmsi"),
-        F.col("ais.static_report.shipName").alias("shipName"),
-        F.col("ais.static_report.shipType").alias("shipType"),
-        F.col("ais.static_report.callsign").alias("callsign"),
-        F.lit(None).cast("string").alias("destination"),
-        F.lit(None).cast("double").alias("draught"),
-    )
-    return t5.unionByName(t24)
-
-
-def build_gold(positions: DataFrame, statics: DataFrame) -> DataFrame:
-    """J1: each position enriched with the latest static report of the same
-    vessel (merge_asof twin, ais_analysis.py:476)."""
-    right = statics.select("mmsi", "ts", *STATIC_COLS)
-    return asof_join(
-        positions.drop("messageType"),
-        right,
-        on="ts",
-        by="mmsi",
-        right_cols=STATIC_COLS,
-    )
-
-
 def build_gold_fused(decoded: DataFrame) -> DataFrame:
-    """:func:`build_gold` in ONE narrow pass over ``decoded``.
+    """J1, the gold table: each position (types 1/2/3) enriched with the
+    latest static report (types 5 and 24) of the same vessel, like the
+    reference's ``merge_asof`` (ais_analysis.py:476), in ONE narrow pass
+    over ``decoded``.
 
-    The composed form consumes ``decoded`` three times (positions + the
-    t5/t24 static union), which forces an eager staging barrier so the
-    Python decode runs once. But :func:`pincspark.operators.asof.asof_join`
-    unions its two sides BEFORE its single key shuffle anyway — so the
-    position/static fan-out can be ONE projection: filter to the five gold
-    message types, CASE the position fields (null on static rows), CASE
-    the carried static struct (null on position rows), tag the side, then
-    run exactly the asof window. ``decoded`` then has ONE consumer, the
-    staging barrier disappears, and the Arrow decode stage pipelines
-    straight into the as-of exchange — at 100 TB that removes a full
-    materialization of the decoded archive. Row-identical to
-    ``build_gold(position_frame(d), static_frame(d))`` (pinned in
+    One projection filters to the five gold message types, CASEs the
+    position fields (null on static rows), CASEs the carried static struct
+    (null on position rows; msg-24 part A carries shipName, part B
+    shipType/callsign, and destination/draught are null-filled, P24
+    semantics) and tags the side; :func:`carry_forward` then runs the
+    as-of window. ``decoded`` has ONE consumer, so the Arrow decode stage
+    pipelines straight into the as-of exchange with no staging barrier.
+    Row-identical to the pandas twin's ``merge_asof`` gold (pinned in
     tests/test_analysis.py)."""
-    from pyspark.sql import Window
-
     from pincspark.catalog import POSITION
 
     t = F.col("ais.messageType")
@@ -132,15 +80,8 @@ def build_gold_fused(decoded: DataFrame) -> DataFrame:
         )
         .alias("__carry"),
     )
-    # Identical window semantics to asof_join: right rows sort before left
-    # rows on ts ties -> backward-inclusive merge_asof.
-    w = (
-        Window.partitionBy("mmsi")
-        .orderBy(F.col("ts").asc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.withColumn("__c", F.last("__carry", ignorenulls=True).over(w))
-    return filled.filter(F.col("__side") == 1).select(
+    filled = carry_forward(unioned, "ts", ["mmsi"])
+    return filled.select(
         "ts",
         "mmsi",
         *pos_fields,
@@ -158,7 +99,6 @@ def batch_archive_analysis(
     spark: SparkSession,
     archive_path: str,
     gold_path: str | None = None,
-    plan_sink: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full §3.1 pipeline. Returns (gold, occupancy); writes/re-reads the
     gold parquet when ``gold_path`` is given (the reference persists then
@@ -173,7 +113,6 @@ def batch_archive_analysis(
     decoded = read_and_decode(
         spark,
         archive_path,
-        plan_sink=plan_sink,
         message_types=GOLD_TYPES,
         stage_decoded=gold_path is None,
     )
@@ -182,11 +121,7 @@ def batch_archive_analysis(
         gold.write.mode("overwrite").parquet(gold_path)
         gold = spark.read.parquet(gold_path)
 
-    in_zones = spatial_join(
-        gold.filter(F.col("longitude").isNotNull()), zones=None
-    )
-    occupancy = in_zones.groupBy("zone_id", "zone_name").agg(
-        F.countDistinct("mmsi").alias("n_vessels"),
-        F.count(F.lit(1)).alias("n_reports"),
-    )
+    occupancy = zone_occupancy(
+        gold.filter(F.col("longitude").isNotNull())
+    ).withColumnRenamed("n_points", "n_reports")
     return gold, occupancy

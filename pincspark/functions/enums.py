@@ -310,15 +310,6 @@ WEATHER_DESCS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def attach_weather_descriptions(df: DataFrame, prefix: str = "") -> DataFrame:
-    """Attach every weather enum description as scalar lookup expressions
-    (flat columns like ``seaStateDesc``). ``prefix`` locates the code
-    columns, e.g. ``"ais.bin_broadcast."`` on a decoded stream."""
-    for code_col, enum_name, out_col in WEATHER_DESCS:
-        df = df.withColumn(out_col, lookup(F.col(prefix + code_col), enum_name))
-    return df
-
-
 def attach_enum(
     df: DataFrame,
     spark: SparkSession,

@@ -29,6 +29,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def carry_forward(tagged: DataFrame, on: str, by: Sequence[str]) -> DataFrame:
+    """The as-of window over a tagged union of both sides: ``__side`` is 0
+    on right rows and 1 on left rows, and right rows carry their payload
+    as the ``__carry`` struct (null on left rows). Returns the left rows
+    with ``__c``, the latest ``__carry`` at or before each row's ``on``
+    within its ``by`` group.
+
+    Right rows sort before left rows on ``on`` ties, so the join is
+    backward-INCLUSIVE, exactly like merge_asof."""
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(F.col(on).asc(), F.col("__side").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    filled = tagged.withColumn("__c", F.last("__carry", ignorenulls=True).over(w))
+    return filled.filter(F.col("__side") == 1)
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -85,16 +103,8 @@ def asof_join(
         if c not in r_tagged.columns:
             r_tagged = r_tagged.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
 
-    unioned = l_tagged.unionByName(r_tagged)
-
-    # Right rows sort before left rows on ts ties -> backward-inclusive.
-    w = (
-        Window.partitionBy(*by_cols)
-        .orderBy(F.col(on).asc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.withColumn("__c", F.last("__carry", ignorenulls=True).over(w))
-    return filled.filter(F.col("__side") == 1).select(
+    filled = carry_forward(l_tagged.unionByName(r_tagged), on, by_cols)
+    return filled.select(
         *[c for c in left.columns],
         *[F.col("__c").getField(carried[c]).alias(carried[c]) for c in right_cols],
         F.col("__c").getField(carried_on).alias(carried_on),

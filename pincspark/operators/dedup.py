@@ -214,15 +214,6 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
     return df.repartition(n, key)
 
 
-def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (id, shingle). array_distinct
-    makes (id, shingle) unique already — no row-level distinct (that would
-    be a full extra shuffle)."""
-    return _spread(df, id_col).select(
-        F.col(id_col), F.explode(shingle_array_py(text_col, n)).alias("shingle")
-    )
-
-
 def _pair_combinations(ids: F.Column) -> F.Column:
     """All ordered pairs (id_a < id_b) of a sorted id array, as an array of
     structs — pure column expressions (flatten of per-element suffixes)."""
@@ -881,6 +872,32 @@ def simhash_hamming_pairs(
     )
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as one backtick-quoted identifier with embedded backticks
+    doubled: it then reads as that exact column both in SQL text and as
+    an ``F.col`` name, whatever characters it holds."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def band_slices(hash_col: str, bits: int, bands: int) -> F.Column:
+    """array<struct<band, slice>>: the ``bands`` slices of the ``bits``-wide
+    fingerprint column ``hash_col``, each shifted then masked (so signed
+    fingerprints are fine). One SQL parse for the whole array, as this
+    builder runs inside the timed spans of q43/q111/q113/q114;
+    operator-identical to a per-band Column chain."""
+    width = bits // bands
+    mask = (1 << width) - 1
+    h = quote_ident(hash_col)
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"struct({b} as band, shiftright({h}, {b * width}) & {mask} as slice)"
+            for b in range(bands)
+        )
+        + ")"
+    )
+
+
 def banded_hamming_pairs(
     hashed: DataFrame,
     id_col: str,
@@ -904,23 +921,10 @@ def banded_hamming_pairs(
     Signed fingerprints are fine: band slices mask after the shift, and
     bit_count reads the two's-complement bits identically in Spark and
     DuckDB."""
-    width = bits // bands
-    mask = (1 << width) - 1
-    # One SQL parse for the whole band array (guide §7.3 — this builder
-    # runs inside the timed span of q43/q111/q113/q114); operator-
-    # identical to the former per-band Column chain.
-    band_structs = F.expr(
-        "array("
-        + ", ".join(
-            f"struct({b} as band, "
-            f"shiftright(`{hash_col}`, {b * width}) & {mask} as slice)"
-            for b in range(bands)
-        )
-        + ")"
-    )
+    h = F.col(quote_ident(hash_col))
     banded = hashed.select(
-        F.col(id_col), F.col(hash_col), F.explode(band_structs).alias("bs")
-    ).select(id_col, hash_col, "bs.band", "bs.slice")
+        F.col(id_col), h, F.explode(band_slices(hash_col, bits, bands)).alias("bs")
+    ).select(id_col, h, "bs.band", "bs.slice")
     # Staged once: three consumers below (size table, both join sides)
     # would each re-run the upstream fingerprint computation otherwise —
     # same single-scan policy as q54's shingle staging. At cluster scale
@@ -938,14 +942,14 @@ def banded_hamming_pairs(
         "band",
         "slice",
         F.col(id_col).alias("id_a"),
-        F.col(hash_col).alias("__sa"),
+        h.alias("__sa"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(_PAIR_SALTS)).alias("__salt"),
     )
     b = ok.select(
         "band",
         "slice",
         F.col(id_col).alias("id_b"),
-        F.col(hash_col).alias("__sb"),
+        h.alias("__sb"),
         F.explode(F.sequence(F.lit(0), F.lit(_PAIR_SALTS - 1))).alias("__salt"),
     )
     pairs = (

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pincspark.operators.dedup import band_slices, quote_ident
 from pincspark.planhooks import record_staged_plan
 
 
@@ -59,30 +60,16 @@ def banded_fingerprints(
 ) -> DataFrame:
     """(media_id, fhash, band, slice, pb) — one row per (row, band).
 
-    Same band/slice arithmetic as `dedup.banded_hamming_pairs` (shift +
-    mask, signed-safe); ``pb`` folds (band, slice) onto
+    The band/slice arithmetic is `dedup.band_slices`, shared with
+    `dedup.banded_hamming_pairs`; ``pb`` folds (band, slice) onto
     ``bands * n_buckets`` partition buckets so the persisted table has a
     bounded directory count while a lookup still prunes to the buckets
     it touches."""
-    width = bits // bands
-    mask = (1 << width) - 1
-    # one SQL parse instead of per-band Column chains (the r17
-    # banded_hamming_pairs idiom — plan construction is serial driver
-    # time inside every serve span); parsed tree operator-identical
-    band_structs = F.expr(
-        "array("
-        + ", ".join(
-            f"struct({b} as band, "
-            f"shiftright(`{hash_col}`, {b * width}) & {mask} as slice)"
-            for b in range(bands)
-        )
-        + ")"
-    )
     return (
         hashed.select(
             F.col(id_col).alias("media_id"),
-            F.col(hash_col).alias("fhash"),
-            F.explode(band_structs).alias("bs"),
+            F.col(quote_ident(hash_col)).alias("fhash"),
+            F.explode(band_slices(hash_col, bits, bands)).alias("bs"),
         )
         .select("media_id", "fhash", "bs.band", "bs.slice")
         .withColumn(

@@ -323,7 +323,8 @@ def encounters(
     w = Window.partitionBy(key, "bkt").orderBy(ts_col)
     pos = (
         fixes.withColumn(
-            "bkt", F.expr(f"unix_timestamp({ts_col}) div {bucket_s}")
+            "bkt",
+            F.call_function("div", F.unix_timestamp(F.col(ts_col)), F.lit(bucket_s)),
         )
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

@@ -123,110 +123,3 @@ def bucketed_join(
     (verified in tests/test_scale.py and tests/test_bucketing.py)."""
     keys = [key] if isinstance(key, str) else list(key)
     return spark.table(left_table).join(spark.table(right_table), keys, how)
-
-
-# ---------------------------------------------------------------------------
-# Z-order layout (Morton curve) for spatial/range locality.
-#
-# At 100 TB the win from the geo tier's broadcast PIP predicate is capped by
-# how much of the fact table a box query must SCAN. Writing position data
-# z-ordered — partitioned by the top Morton bits, sorted by the full key
-# within partitions — makes any lat/lon box touch only the partitions whose
-# coarse grid cells intersect it (partition pruning) and gives parquet
-# row-group min/max stats locality within each file. Pure column
-# expressions: the bit interleave unrolls to shift/or terms inside
-# whole-stage codegen; the pruning filter is a <=64-value IN list computed
-# on the driver from the query box (no BIGMIN machinery needed at this
-# granularity).
-# ---------------------------------------------------------------------------
-
-
-def zorder_key(
-    x,
-    y,
-    bits: int = 16,
-    x_range: tuple[float, float] = (-180.0, 180.0),
-    y_range: tuple[float, float] = (-90.0, 90.0),
-):
-    """Morton (z-order) key of two doubles as a bigint column: each dim
-    quantized to ``bits`` levels, bits interleaved (x even, y odd)."""
-
-    def _quant(col, lo, hi):
-        scaled = (col - F.lit(lo)) / F.lit(hi - lo) * F.lit((1 << bits) - 1)
-        clamped = F.greatest(F.lit(0.0), F.least(F.lit(float((1 << bits) - 1)), scaled))
-        return clamped.cast("bigint")
-
-    qx = _quant(x, *x_range)
-    qy = _quant(y, *y_range)
-    z = F.lit(0).cast("bigint")
-    for i in range(bits):
-        z = (
-            z.bitwiseOR(F.shiftleft(F.shiftright(qx, i).bitwiseAND(F.lit(1)), 2 * i))
-            .bitwiseOR(F.shiftleft(F.shiftright(qy, i).bitwiseAND(F.lit(1)), 2 * i + 1))
-        )
-    return z
-
-
-def _zbucket(z, bits: int, grid_bits: int):
-    """Top 2*grid_bits Morton bits -> coarse grid cell id."""
-    return F.shiftright(z, 2 * (bits - grid_bits))
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    bits: int = 16,
-    grid_bits: int = 3,
-    x_range: tuple[float, float] = (-180.0, 180.0),
-    y_range: tuple[float, float] = (-90.0, 90.0),
-) -> None:
-    """Write ``df`` z-order-clustered: hive-partitioned by the coarse
-    Morton cell (``4^grid_bits`` partitions), rows sorted by the full
-    z-key within each partition (row-group stat locality)."""
-    z = zorder_key(F.col(x_col), F.col(y_col), bits, x_range, y_range)
-    (
-        df.withColumn("__z", z)
-        .withColumn("zbucket", _zbucket(F.col("__z"), bits, grid_bits))
-        .repartition("zbucket")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .partitionBy("zbucket")
-        .parquet(path)
-    )
-
-
-def zbox_buckets(
-    x_lo: float,
-    x_hi: float,
-    y_lo: float,
-    y_hi: float,
-    bits: int = 16,
-    grid_bits: int = 3,
-    x_range: tuple[float, float] = (-180.0, 180.0),
-    y_range: tuple[float, float] = (-90.0, 90.0),
-) -> list[int]:
-    """The coarse Morton cells a query box intersects (driver-side,
-    <= 4^grid_bits values) — AND this as ``col('zbucket').isin(...)`` with
-    the exact box predicate to get partition pruning on a z-ordered
-    table."""
-
-    def _q(v, lo, hi):
-        lvl = (1 << bits) - 1
-        s = (v - lo) / (hi - lo) * lvl
-        return max(0, min(lvl, int(s)))
-
-    shift = bits - grid_bits
-    cx0, cx1 = _q(x_lo, *x_range) >> shift, _q(x_hi, *x_range) >> shift
-    cy0, cy1 = _q(y_lo, *y_range) >> shift, _q(y_hi, *y_range) >> shift
-    cells = []
-    for cy in range(cy0, cy1 + 1):
-        for cx in range(cx0, cx1 + 1):
-            z = 0
-            for i in range(grid_bits):
-                z |= ((cx >> i) & 1) << (2 * i)
-                z |= ((cy >> i) & 1) << (2 * i + 1)
-            cells.append(z)
-    return sorted(cells)

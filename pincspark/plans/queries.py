@@ -1741,10 +1741,11 @@ def q88_reassembly_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-ordered concat all go RED. line numbers are explicit (not
     monotonically_increasing_id) so the gate is deterministic under any
     parallelism; S1's mono-id adjacency + split-boundary repair stay
-    pinned by the flagship and tests/test_nmea_source.py."""
+    pinned by the flagship and tests/test_pipeline.py."""
     from pincspark.decode.kernel import routing_message_type
     from pincspark.sources.nmea_source import (
         reassemble,
+        split_tagblock,
         tokenize_sentences,
         with_tagblock_ts,
     )
@@ -1752,19 +1753,9 @@ def q88_reassembly_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.createDataFrame(
         list(enumerate(REASSEMBLY_ARCHIVE)), "line_idx LONG, value STRING"
     )
-    df = (
-        df.filter(F.col("value") != "")
-        .withColumn("bang", F.instr(F.col("value"), "!"))
-        .filter(F.col("bang") > 0)
-        .select(
-            "line_idx",
-            F.expr("substring(value, 1, bang - 1)").alias("tagblock"),
-            F.expr("substring(value, bang, 1000000)").alias("sentence"),
-        )
-    )
+    df = split_tagblock(df.filter(F.col("value") != ""), "line_idx")
     out = reassemble(
         tokenize_sentences(with_tagblock_ts(df)),
-        repair_boundaries=True,
         materialize=False,  # deterministic tiny input; keep the plan lazy
     )
     return out.select(

@@ -9,20 +9,44 @@ Reference behavior re-expressed:
   validating monotonic package numbers / constant package id;
 - ais_analysis.py:266-288 drops groups with checksum or sequence errors.
 
+The archive scan, the streaming chain and q88 split the tag block off
+with the one :func:`split_tagblock` helper.
+
 Batch grouping trick: multi-part fragments are adjacent lines, so
 ``line_idx - (num - 1)`` is constant within a group — grouping on that key
 plus seq id reassembles without any stateful pass. Singletons (total == 1,
 the overwhelming majority of AIS traffic) bypass the shuffle entirely on a
-narrow branch; ONE shuffle carries only the multi-part sliver.
+narrow branch; ONE shuffle carries only the multi-part sliver, and a
+boundary-repair pass rescues the groups an input split cut in two.
+
+Staging goes through ``pincspark.staging.stage`` only, which records each
+pre-checkpoint plan for ``planhooks.capture_staged_plans`` audits: the
+validated tokenized frame (three consumers) and, when the caller fans out,
+the decoded frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pincspark.decode.kernel import checksum_valid
 from pincspark.staging import stage
+
+
+def split_tagblock(lines: DataFrame, *keep: str) -> DataFrame:
+    """Split each raw line (column ``value``) at its first '!' into
+    ``tagblock`` and ``sentence``; lines without a '!' drop. ``keep``
+    columns pass through ahead of the two."""
+    return (
+        lines.withColumn("bang", F.instr(F.col("value"), "!"))
+        .filter(F.col("bang") > 0)
+        .select(
+            *keep,
+            F.expr("substring(value, 1, bang - 1)").alias("tagblock"),
+            F.expr("substring(value, bang, 1000000)").alias("sentence"),
+        )
+    )
 
 
 def read_archive(spark: SparkSession, path: str) -> DataFrame:
@@ -32,22 +56,13 @@ def read_archive(spark: SparkSession, path: str) -> DataFrame:
     ``line_idx`` is ``monotonically_increasing_id`` used RAW: it is
     consecutive within each input split, which is all the adjacency group
     key needs — a global ``row_number()`` window here would funnel the
-    entire archive through one task (the 100-TB anti-pattern). Trade-off: a
-    multi-part group cut by a split boundary is dropped as incomplete;
-    the streaming ST1 operator (keyed state, no adjacency assumption)
-    covers feeds where that loss matters.
+    entire archive through one task (the 100-TB anti-pattern). A
+    multi-part group cut by a split boundary is rejoined by
+    :func:`reassemble`'s repair pass.
     """
-    raw = spark.read.text(path)
-    return (
-        raw.filter(F.col("value") != "")
-        .withColumn("line_idx", F.monotonically_increasing_id())
-        .withColumn("bang", F.instr(F.col("value"), "!"))
-        .filter(F.col("bang") > 0)
-        .select(
-            "line_idx",
-            F.expr("substring(value, 1, bang - 1)").alias("tagblock"),
-            F.expr("substring(value, bang, 1000000)").alias("sentence"),
-        )
+    raw = spark.read.text(path).filter(F.col("value") != "")
+    return split_tagblock(
+        raw.withColumn("line_idx", F.monotonically_increasing_id()), "line_idx"
     )
 
 
@@ -112,12 +127,7 @@ def _emit_groups(grouped: DataFrame) -> DataFrame:
     )
 
 
-def reassemble(
-    df: DataFrame,
-    repair_boundaries: bool = True,
-    materialize: bool | None = None,
-    plan_sink: list | None = None,
-) -> DataFrame:
+def reassemble(df: DataFrame, materialize: bool = True) -> DataFrame:
     """ST1-batch: validate checksums, group adjacent fragments, emit one row
     per complete message group with the concatenated payload.
 
@@ -125,8 +135,8 @@ def reassemble(
     incomplete groups, groups whose fragment numbers are not exactly
     1..total with a constant seq id.
 
-    ``repair_boundaries``: the adjacency key (``line_idx - (num-1)``) is
-    only consecutive WITHIN an input split, so a multi-part group cut by a
+    Boundary repair: the adjacency key (``line_idx - (num-1)``) is only
+    consecutive WITHIN an input split, so a multi-part group cut by a
     split boundary first lands as two incomplete halves. The repair pass
     re-groups ONLY those leftovers (a handful of fragments per boundary,
     thousands of rows at 100 TB, not billions) globally per
@@ -144,34 +154,20 @@ def reassemble(
     into a fabricated message that the reference — one unsplit stream —
     would drop.
 
-    ``materialize`` (default: follows ``repair_boundaries``): the
-    singleton bypass, the grouped branch, and the repair branch are three
-    consumers of the validated tokenized frame, and Spark re-executes the
-    archive scan per consumer (common-subtree reuse is not guaranteed
-    across the union). Eagerly ``localCheckpoint``-ing that frame (r10 —
-    previously the staged frame was ``grouped``, before singletons
-    bypassed the shuffle) stages it once, so the archive is scanned
-    exactly once regardless of how many frames fan out above. On a
-    multi-executor cluster prefer ``.checkpoint()`` to reliable storage
-    or staging to parquet — localCheckpoint trades executor-loss
-    tolerance for speed.
+    ``materialize``: the singleton bypass, the grouped branch, and the
+    repair branch are three consumers of the validated tokenized frame,
+    and Spark re-executes the archive scan per consumer (common-subtree
+    reuse is not guaranteed across the union). Staging that frame once
+    scans the archive exactly once regardless of how many frames fan out
+    above. Pass False for tiny in-memory inputs whose plan should stay
+    lazy.
     """
-    if materialize is None:
-        materialize = repair_boundaries
     # Project to exactly what reassembly consumes BEFORE staging: the raw
     # sentence (the widest column) never leaves the scan stage.
     valid = df.filter(checksum_valid(F.col("sentence"))).select(
         "line_idx", "tagblock", "ts", "seq_id", "total", "num", "payload"
     )
     if materialize:
-        # Stage the validated tokenized frame ONCE: the singleton branch,
-        # the grouped branch, and the repair branch all fan out from it,
-        # so the archive executes exactly one FileScan regardless of how
-        # many consumers sit above (the same single-scan policy
-        # test_plans.py pins for the whole flagship). On a multi-executor
-        # cluster prefer .checkpoint() to reliable storage.
-        if plan_sink is not None:
-            plan_sink.append(valid._jdf.queryExecution().executedPlan().toString())
         # eager=False: the first action over the union materializes the
         # staged frame in-job (no separate job barrier); later consumers
         # in the same and subsequent actions read the stored blocks.
@@ -213,10 +209,6 @@ def reassemble(
         )
     )
     out = singles.unionByName(_emit_groups(grouped))
-    if not repair_boundaries:
-        return out
-
-    from pyspark.sql import Window
 
     leftovers = (
         grouped.filter(F.col("n_frags") != F.col("total"))
@@ -273,10 +265,8 @@ def reassemble(
 def read_and_decode(
     spark: SparkSession,
     path: str,
-    materialize: bool = True,
-    plan_sink: list | None = None,
     message_types: "tuple[int, ...] | None" = None,
-    stage_decoded: bool | None = None,
+    stage_decoded: bool = True,
 ) -> DataFrame:
     """Full S1 -> P27 -> P1 -> P2/ST1 -> decode pipeline, ending with the
     typed ``ais`` struct column.
@@ -289,32 +279,23 @@ def read_and_decode(
     then filters (ais_analysis.py:341-352); routing-before-decode is this
     engine's design point (SURVEY §2.3 F1) and is output-identical.
 
-    ``stage_decoded`` (default: follows ``materialize``): eagerly
-    ``localCheckpoint`` the decoded frame so downstream fan-out re-reads
-    the staged result instead of re-running the Python decode per
-    consumer. Pass False when the caller consumes ``decoded`` exactly
-    ONCE (e.g. the fused flagship gold, analysis.build_gold_fused): the
+    ``stage_decoded``: eagerly stage the decoded frame so downstream
+    fan-out re-reads the staged result instead of re-running the Python
+    decode per consumer. Pass False when the caller consumes ``decoded``
+    exactly ONCE (e.g. the flagship gold, analysis.build_gold_fused): the
     barrier and the block ser/de of the wide ais struct are then pure
     overhead, and dropping them still executes ONE archive FileScan and
-    ONE ArrowEvalPython (asserted in tests/test_plans.py).
-    ``materialize`` continues to gate the reassembly ``valid`` staging
-    (three consumers: singleton bypass + grouped + repair).
-    ``plan_sink``: debug hook — collects the executed-plan strings of each
-    staged subtree so tests can assert over the full executed work."""
+    ONE ArrowEvalPython (asserted in tests/test_plans.py)."""
     from pincspark.decode.kernel import decode_ais, routing_message_type
 
-    if stage_decoded is None:
-        stage_decoded = materialize
     df = tokenize_sentences(with_tagblock_ts(read_archive(spark, path)))
-    reassembled = reassemble(df, materialize=materialize, plan_sink=plan_sink)
+    reassembled = reassemble(df)
     if message_types is not None:
         reassembled = reassembled.filter(
             routing_message_type(F.col("payload")).isin(*message_types)
         )
     decoded = decode_ais(reassembled, plan_barrier=True)
     if stage_decoded:
-        if plan_sink is not None:
-            plan_sink.append(decoded._jdf.queryExecution().executedPlan().toString())
         decoded = stage(decoded, "decode:staged", eager=True)
     return decoded
 
@@ -330,12 +311,7 @@ def decode_line_stream(
     from pincspark.decode.kernel import checksum_valid, decode_ais
     from pincspark.streaming.reassembly import reassemble_stream
 
-    df = raw.filter(F.col("value") != "").withColumn(
-        "bang", F.instr(F.col("value"), "!")
-    ).filter(F.col("bang") > 0).select(
-        F.expr("substring(value, 1, bang - 1)").alias("tagblock"),
-        F.expr("substring(value, bang, 1000000)").alias("sentence"),
-    )
+    df = split_tagblock(raw.filter(F.col("value") != ""))
     df = tokenize_sentences(df).filter(checksum_valid(F.col("sentence")))
     reassembled = with_tagblock_ts(reassemble_stream(df, timeout_ms=timeout_ms))
     return decode_ais(reassembled)

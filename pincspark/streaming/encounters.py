@@ -87,7 +87,9 @@ def route_fixes(
     is a plain column tuple). ``is_home`` marks the single home copy."""
     base = fixes.select(
         F.col(key).cast("bigint").alias("k"),
-        F.expr(f"unix_timestamp({ts_col}) div {bucket_s}").alias("bkt"),
+        F.call_function(
+            "div", F.unix_timestamp(F.col(ts_col)), F.lit(bucket_s)
+        ).alias("bkt"),
         F.col(lat_col).alias("lat"),
         F.col(lon_col).alias("lon"),
         F.floor(F.col(lon_col) / F.lit(cell_deg)).alias("home_cx"),

@@ -86,16 +86,6 @@ def upsert_latest(
         shutil.rmtree(old)
 
 
-def foreach_batch_upsert(path: str, key: str | Sequence[str], order_col: str):
-    """writeStream.foreachBatch adapter for :func:`upsert_latest` (the
-    streaming IVEF track-state path, ais_ivef.py:425-451)."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_latest(batch_df.sparkSession, batch_df, path, key, order_col)
-
-    return _fn
-
-
 def update_sketch_table(
     spark: SparkSession,
     batch_df: DataFrame,

@@ -121,6 +121,6 @@ def interval_join_stream(
     cond = (
         (lw[key] == rw[key])
         & (rw[right_ts] >= lw[left_ts])
-        & (rw[right_ts] <= F.expr(f"{left_ts} + INTERVAL {within}"))
+        & (rw[right_ts] <= lw[left_ts] + F.expr(f"INTERVAL {within}"))
     )
     return lw.join(rw, cond, "inner")

@@ -49,6 +49,24 @@ def archive(tmp_path_factory):
     return str(p), pos, stat5
 
 
+def _with_mmsi(sentence: str, mmsi: int) -> str:
+    """A single-part sentence with its payload's MMSI (bits 8-37) replaced
+    and the checksum recomputed."""
+    fields = sentence.split(",")
+    six = [ord(c) - 48 for c in fields[5]]
+    bits = "".join(f"{v - 8 if v > 40 else v:06b}" for v in six)
+    bits = bits[:8] + f"{mmsi:030b}" + bits[38:]
+    fields[5] = "".join(
+        chr(v + 56 if v > 39 else v + 48)
+        for v in (int(bits[i : i + 6], 2) for i in range(0, len(bits), 6))
+    )
+    body = ",".join(fields).split("*")[0]
+    checksum = 0
+    for ch in body[1:]:
+        checksum ^= ord(ch)
+    return f"{body}*{checksum:02X}"
+
+
 def test_flagship_pipeline(spark, tmp_path, archive):
     from pincspark.analysis import batch_archive_analysis
 
@@ -96,19 +114,18 @@ def test_flagship_pipeline(spark, tmp_path, archive):
 
 def test_fused_gold_matches_composed(spark, tmp_path, archive):
     """build_gold_fused (one narrow pass over decoded, the flagship's path)
-    must be row-identical to the composed
-    build_gold(position_frame, static_frame) form, including the t24
-    static branch with its null-filled destination/draught."""
-    from pincspark.analysis import (
-        GOLD_TYPES,
-        build_gold,
-        build_gold_fused,
-        position_frame,
-        static_frame,
-    )
-    from pincspark.sources.nmea_source import read_and_decode
+    must be row-identical to the pandas twin's composed gold — the
+    reference's decode loop split into position and static frames, then
+    ``pd.merge_asof`` on ts by mmsi (ais_analysis.py:476) — on every column
+    both produce, including the t24 static branch with its null-filled
+    destination/draught."""
+    import pandas as pd
 
-    path, _, _ = archive
+    from pincspark.analysis import GOLD_TYPES, build_gold_fused
+    from pincspark.sources.nmea_source import read_and_decode
+    from scripts.reference_baseline import decode_archive
+
+    path, pos1, stat5 = archive
     # widen the traffic: append every golden message (incl. both type-24
     # parts and non-gold types that must be filtered identically)
     lines = open(path).read().splitlines()
@@ -117,24 +134,67 @@ def test_fused_gold_matches_composed(spark, tmp_path, archive):
         for s in r["sentences"]:
             lines.append(_tag(t) + s)
         t += 60
+    # then positions of the static vessels themselves: one at the SAME ts
+    # as the type-5 static (the backward-inclusive tie) and ones after the
+    # type-5 and the type-24 part-B statics (part B nulls shipName), so
+    # the as-of actually joins
+    t24b = next(
+        r for r in GOLDEN
+        if r["common"]["messageType"] == 24 and r["common"]["mmsi"] == 533000650
+    )
+    type1 = pos1[0]["sentences"][0]
+    for r in (stat5, t24b):
+        for s in r["sentences"]:
+            lines.append(_tag(t) + s)
+        mmsi = r["common"]["mmsi"]
+        lines.append(_tag(t) + _with_mmsi(type1, mmsi))
+        lines.append(_tag(t + 60) + _with_mmsi(type1, mmsi))
+        t += 120
     p = tmp_path / "Datalog_fused"
     p.write_text("\n".join(lines) + "\n")
 
-    decoded = read_and_decode(spark, str(p))
-    composed = build_gold(position_frame(decoded), static_frame(decoded))
+    positions, statics = decode_archive(str(p))
+    pos = pd.DataFrame(
+        positions,
+        columns=["ts", "messageType", "mmsi", "longitude", "latitude", "sog", "cog"],
+    )
+    stat = pd.DataFrame(
+        statics,
+        columns=["ts", "mmsi", "shipName", "shipType", "callsign",
+                 "destination", "draught"],
+    )
+    twin = pd.merge_asof(
+        pos.sort_values("ts", kind="stable"),
+        stat.sort_values("ts", kind="stable"),
+        on="ts",
+        by="mmsi",
+    )
+    cols = [c for c in twin.columns if c != "messageType"]
+    want = sorted(
+        tuple(None if pd.isna(v) else v for v in row)
+        for row in twin[cols].itertuples(index=False)
+    )
+
     fused = build_gold_fused(
         read_and_decode(spark, str(p), message_types=GOLD_TYPES, stage_decoded=False)
     )
-    assert fused.columns == composed.columns
-    assert sorted(map(tuple, fused.collect())) == sorted(
-        map(tuple, composed.collect())
+    assert set(cols) <= set(fused.columns)
+    got = sorted(
+        tuple(r)
+        for r in fused.select(
+            F.col("ts").cast("long").alias("ts"), *cols[1:]
+        ).collect()
     )
+    assert len(got) == len(pos) == 10
+    assert got == want
+    joined = {(r[cols.index("shipName")], r[cols.index("shipType")]) for r in got}
+    assert {("MAERSK WALLIS", stat5["body"]["shipType"]), (None, 60)} < joined
 
 
 def test_asof_tie_is_backward_inclusive(spark):
     """Equal timestamps: the static at the SAME ts as the position must be
     picked up (pandas merge_asof backward-inclusive, ais_analysis.py:476)."""
-    from pincspark.analysis import build_gold
+    from pincspark.operators.asof import asof_join
 
     positions = spark.createDataFrame(
         [(100, 10.0, 1.0, 5)], "mmsi BIGINT, longitude DOUBLE, latitude DOUBLE, ts INT"
@@ -143,6 +203,6 @@ def test_asof_tie_is_backward_inclusive(spark):
         [(100, 5, "SHIP A", 70, "CS", "DEST", 5.0)],
         "mmsi BIGINT, ts INT, shipName STRING, shipType INT, callsign STRING, destination STRING, draught DOUBLE",
     ).withColumn("ts", F.timestamp_seconds("ts"))
-    gold = build_gold(positions, statics)
+    gold = asof_join(positions, statics, on="ts", by="mmsi")
     r = gold.collect()[0]
     assert r["shipName"] == "SHIP A"

@@ -57,6 +57,18 @@ BATCH = [
 ]
 
 
+def test_banded_fingerprints_hash_col_with_a_backtick(spark):
+    """A fingerprint column whose name holds a backtick bands exactly like
+    a plain name (the slices quote it as one identifier)."""
+    from pincspark.operators.fingerprint_index import banded_fingerprints
+
+    df = _hashed(spark, [(1, 0x0123456789ABCDEF), (2, -5)])
+    want = sorted(map(tuple, banded_fingerprints(df).collect()))
+    odd = df.withColumnRenamed("fhash", "f`hash")
+    got = sorted(map(tuple, banded_fingerprints(odd, hash_col="f`hash").collect()))
+    assert got == want and len(got) == 8
+
+
 def test_update_matches_brute_force_and_never_rewrites_history(spark, tmp_path):
     path = str(tmp_path / "fpidx")
     build_fingerprint_index(_hashed(spark, HIST), path)

@@ -197,6 +197,22 @@ def test_encounters_radius_and_bucket_knobs(spark):
     assert _enc(spark, pts, radius_m=1000, bucket_s=900) == {}
 
 
+def test_encounters_ts_column_with_a_space(spark):
+    # The time bucket is built from F.col(ts_col), so a ts column whose
+    # name holds a space gives the same table as the default name.
+    t = datetime(2024, 1, 1, 12, 0, 0)
+    fixes = [(1, t, 1.0, 100.049), (2, t, 1.0, 100.059)]
+    want = _enc(spark, fixes)
+    df = spark.createDataFrame(fixes, ["mmsi", "fix ts", "latitude", "longitude"])
+    got = {
+        (r["mmsi_a"], r["mmsi_b"]): (
+            r["n_close"], r["min_dist_m"], r["first_bkt"], r["last_bkt"]
+        )
+        for r in encounters(df, ts_col="fix ts").collect()
+    }
+    assert got == want and list(got) == [(1, 2)]
+
+
 def test_resample_tracks_semantics(spark):
     """Half-open grid, linear values, gap guard, ceil-to-grid start: a
     hand-computable two-vessel fixture pins every branch."""

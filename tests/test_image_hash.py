@@ -218,6 +218,21 @@ def test_banded_hamming_pairs_exact_vs_brute_force_random(spark):
     assert want  # the plants actually produced pairs
 
 
+def test_banded_hamming_pairs_hash_col_with_a_backtick(spark):
+    """The band slices reference ``hash_col`` as one quoted identifier, so
+    a fingerprint column whose name holds a backtick pairs exactly like a
+    plain name."""
+    from pincspark.operators.dedup import banded_hamming_pairs
+
+    df = spark.createDataFrame(
+        [(1, 0b1011), (2, 0b1010), (3, -1)], "media_id LONG, h LONG"
+    )
+    want = {tuple(r) for r in banded_hamming_pairs(df, "media_id", "h").collect()}
+    odd = df.withColumnRenamed("h", "h`x")
+    got = {tuple(r) for r in banded_hamming_pairs(odd, "media_id", "h`x").collect()}
+    assert got == want == {(1, 2, 1)}
+
+
 def test_decode_image_hashes_nonstrict_fallback_pairs_identical_blobs(spark):
     """Undecodable blobs in non-strict mode get deterministic byte-digest
     hashes: byte-identical blobs still near-dup at hamming 0, distinct

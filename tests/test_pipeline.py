@@ -198,8 +198,7 @@ def test_bitfield_sql_matches_python_kernel(spark):
 
 def test_reassemble_repairs_split_boundary_groups(spark, tmp_path):
     """A multi-part group cut by an input-split (file) boundary is dropped
-    by the adjacency pass but rescued by the boundary-repair pass; with
-    repair disabled it is lost (the documented round-1 trade-off)."""
+    by the adjacency pass but rescued by the boundary-repair pass."""
     from pincspark.sources.nmea_source import (
         read_archive,
         reassemble,
@@ -216,13 +215,15 @@ def test_reassemble_repairs_split_boundary_groups(spark, tmp_path):
     (d / "b.log").write_text(TAG + part2 + "\n" + TAG + single + "\n")
 
     tok = tokenize_sentences(with_tagblock_ts(read_archive(spark, str(d))))
+    # the halves really sit in different input splits (line_idx's upper
+    # bits are the partition index), so the adjacency pass alone cannot
+    # join them — only the repair pass can
+    halves = tok.filter(F.col("total") == 2).collect()
+    assert len({r["line_idx"] >> 33 for r in halves}) == 2
     repaired = reassemble(tok).collect()
     assert sorted(r["n_sentences"] for r in repaired) == [1, 1, 2]
     two = next(r for r in repaired if r["n_sentences"] == 2)
     assert two["payload"].endswith("PAiH8888880") and two["payload"].startswith("58I3mA82")
-
-    unrepaired = reassemble(tok, repair_boundaries=False).collect()
-    assert sorted(r["n_sentences"] for r in unrepaired) == [1, 1]
 
 
 def test_reassemble_splice_guard_rejects_unrelated_orphans(spark, tmp_path):
@@ -253,6 +254,53 @@ def test_reassemble_splice_guard_rejects_unrelated_orphans(spark, tmp_path):
     out = reassemble(tok).collect()
     # both singles decode; the two orphan halves are dropped, not spliced
     assert sorted(r["n_sentences"] for r in out) == [1, 1]
+
+
+def test_ingest_census_accounts_for_every_line(spark):
+    """q110's conservation law: line statuses + group outcomes account for
+    EVERY archive line exactly once, and the counts equal an independent
+    pure-Python replay of the documented contract (third implementation
+    next to the engine and the DuckDB oracle)."""
+    from functools import reduce
+    from operator import xor
+
+    from pincspark.plans.queries import INGEST_ARCHIVE, q110_ingest_census
+
+    expect: dict[str, int] = {}
+    valid = []  # (line_no, total, num, seq)
+    for i, line in enumerate(INGEST_ARCHIVE):
+        if line == "":
+            k = "empty"
+        elif "!" not in line:
+            k = "no_bang"
+        else:
+            sentence = line[line.index("!"):]
+            if "*" not in sentence:
+                k = "no_checksum"
+            else:
+                body, _, decl = sentence.partition("*")
+                if reduce(xor, body[1:].encode(), 0) != int(decl, 16):
+                    k = "bad_checksum"
+                else:
+                    p = sentence.split(",")
+                    valid.append((i, int(p[1] or 1), int(p[2] or 1), int(p[3] or 0)))
+                    continue
+        expect[k] = expect.get(k, 0) + 1
+    groups: dict[tuple, list[int]] = {}
+    for line_no, total, num, seq in valid:
+        groups.setdefault((line_no - (num - 1), seq, total), []).append(num)
+    for (gkey, seq, total), nums in groups.items():
+        ok = sorted(nums) == list(range(1, total + 1))
+        k = "assembled" if ok else "orphaned"
+        expect[k] = expect.get(k, 0) + len(nums)
+
+    got = {r["status"]: r["n"] for r in q110_ingest_census(spark, "").collect()}
+    assert sum(got.values()) == len(INGEST_ARCHIVE)
+    assert got == expect
+    # the corpus really exercises every class
+    assert set(expect) == {
+        "empty", "no_bang", "no_checksum", "bad_checksum", "assembled", "orphaned"
+    }
 
 
 def test_weather_sql_decode_matches_python_kernel(spark):

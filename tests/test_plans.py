@@ -149,11 +149,12 @@ def test_flagship_single_scan_single_decode(spark, tmp_path):
     ONE Python decode stage (VERDICT r2 #1): without staging, the gold
     fan-out (positions + the t5/t24 static union consume `decoded` three
     times) plus reassemble's two-consumer grouped subtree multiplied the
-    executed plan to 6 FileScans / 12 ArrowEvalPython. The grouped and
-    decoded frames are localCheckpoint-staged once; `plan_sink` captures
-    the executed plan of each staged subtree, so the concatenation of those
+    executed plan to 6 FileScans / 12 ArrowEvalPython. The validated and
+    decoded frames are staged once; `capture_staged_plans` records the
+    executed plan of each staged subtree, so the concatenation of those
     plans with the final gold/occupancy plans IS the total executed work."""
     from pincspark.analysis import batch_archive_analysis
+    from pincspark.planhooks import capture_staged_plans
 
     tag = "\\s:rTEST,c:1673222400*00"
     sentences = [
@@ -164,11 +165,11 @@ def test_flagship_single_scan_single_decode(spark, tmp_path):
     p = tmp_path / "archive.log"
     p.write_text("".join(tag + s + "\n" for s in sentences))
 
-    sink: list[str] = []
-    gold, occupancy = batch_archive_analysis(spark, str(p), plan_sink=sink)
-    assert len(sink) == 2  # grouped stage + decoded stage
+    with capture_staged_plans() as sink:
+        gold, occupancy = batch_archive_analysis(spark, str(p))
+    assert [label for label, _ in sink] == ["reassemble:valid", "decode:staged"]
     everything = "\n".join(
-        sink
+        [plan for _, plan in sink]
         + [
             gold._jdf.queryExecution().executedPlan().toString(),
             occupancy._jdf.queryExecution().executedPlan().toString(),
@@ -186,6 +187,7 @@ def test_flagship_fused_path_single_scan_single_decode(spark, tmp_path):
     `valid` pre-checkpoint plan plus the gold plan — exactly ONE archive
     FileScan, with the F1 routing filter sitting BELOW the Python stage."""
     from pincspark.analysis import GOLD_TYPES, build_gold_fused
+    from pincspark.planhooks import capture_staged_plans
     from pincspark.sources.nmea_source import read_and_decode
 
     tag = "\\s:rTEST,c:1673222400*00"
@@ -197,15 +199,15 @@ def test_flagship_fused_path_single_scan_single_decode(spark, tmp_path):
     p = tmp_path / "archive.log"
     p.write_text("".join(tag + s + "\n" for s in sentences))
 
-    sink: list[str] = []
-    decoded = read_and_decode(
-        spark, str(p), plan_sink=sink, message_types=GOLD_TYPES, stage_decoded=False
-    )
+    with capture_staged_plans() as sink:
+        decoded = read_and_decode(
+            spark, str(p), message_types=GOLD_TYPES, stage_decoded=False
+        )
     gold_plan = (
         build_gold_fused(decoded)._jdf.queryExecution().executedPlan().toString()
     )
-    assert len(sink) == 1  # only the reassembly `valid` stage
-    everything = "\n".join(sink + [gold_plan])
+    assert [label for label, _ in sink] == ["reassemble:valid"]
+    everything = "\n".join([plan for _, plan in sink] + [gold_plan])
     assert everything.count("FileScan") == 1
     assert gold_plan.count("ArrowEvalPython") == 1
     # F1 routing below the Python stage: the pure-SQL armor-char routing

@@ -85,6 +85,7 @@ def spark_reassemble(spark, lines: list[str]):
 
     from pincspark.sources.nmea_source import (
         reassemble,
+        split_tagblock,
         tokenize_sentences,
         with_tagblock_ts,
     )
@@ -92,21 +93,8 @@ def spark_reassemble(spark, lines: list[str]):
     df = spark.createDataFrame(
         list(enumerate(lines)), "line_idx LONG, value STRING"
     )
-    df = (
-        df.filter(F.col("value") != "")
-        .withColumn("bang", F.instr(F.col("value"), "!"))
-        .filter(F.col("bang") > 0)
-        .select(
-            "line_idx",
-            F.expr("substring(value, 1, bang - 1)").alias("tagblock"),
-            F.expr("substring(value, bang, 1000000)").alias("sentence"),
-        )
-    )
-    out = reassemble(
-        tokenize_sentences(with_tagblock_ts(df)),
-        repair_boundaries=True,
-        materialize=False,
-    )
+    df = split_tagblock(df.filter(F.col("value") != ""), "line_idx")
+    out = reassemble(tokenize_sentences(with_tagblock_ts(df)), materialize=False)
     return sorted(
         (r["seq_id"], r["n_sentences"], r["payload"])
         for r in out.select("seq_id", "n_sentences", "payload").collect()

@@ -375,61 +375,6 @@ def test_ivfpq_residual_recall_on_planted_duplicates(spark):
     assert hits >= 22, hits
 
 
-def test_zorder_box_query_prunes_partitions(spark, tmp_path):
-    """Z-order layout: a lat/lon box query on a z-ordered table must (a)
-    return exactly the rows the unclustered table returns, and (b) READ
-    only the partitions whose Morton cells intersect the box —
-    PartitionFilters pruning visible as a strict subset of input files."""
-    from pincspark.operators.scale import write_zordered, zbox_buckets, zorder_key
-    from pincspark.sources.tables import table
-    from pyspark.sql import functions as F
-
-    ev = table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id",
-        (F.lit(100.5) + F.col("value") % F.lit(2.5)).alias("lon"),
-        (F.lit(1.0) + (F.col("user_id") % F.lit(21)).cast("double") / F.lit(10.0)).alias("lat"),
-    )
-    path = str(tmp_path / "zev")
-    write_zordered(ev, path, "lon", "lat", bits=16, grid_bits=3,
-                   x_range=(100.0, 104.0), y_range=(0.0, 4.0))
-    zt = spark.read.parquet(path)
-    assert zt.count() == ev.count()
-
-    box = dict(x_lo=100.6, x_hi=101.2, y_lo=1.0, y_hi=1.8)
-    cells = zbox_buckets(**box, bits=16, grid_bits=3,
-                         x_range=(100.0, 104.0), y_range=(0.0, 4.0))
-    exact = (
-        F.col("lon").between(box["x_lo"], box["x_hi"])
-        & F.col("lat").between(box["y_lo"], box["y_hi"])
-    )
-    pruned = zt.filter(F.col("zbucket").isin(cells) & exact)
-    full = ev.filter(
-        F.col("lon").between(box["x_lo"], box["x_hi"])
-        & F.col("lat").between(box["y_lo"], box["y_hi"])
-    )
-    # (a) the bucket pre-filter loses no rows (the cells COVER the box)
-    assert sorted(r.event_id for r in pruned.collect()) == sorted(
-        r.event_id for r in full.collect()
-    )
-    assert pruned.count() > 0
-    # (b) partition pruning actually happened: the pruned scan touches a
-    # strict subset of the table's files, and the plan pushes the bucket
-    # values into PartitionFilters
-    all_files = set(zt.inputFiles())
-    read_files = {
-        r[0]
-        for r in zt.filter(F.col("zbucket").isin(cells))
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    }
-    assert read_files < all_files, (len(read_files), len(all_files))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "zbucket" in plan.split("PartitionFilters")[1][:200]
-    # the z key itself stays a pure column expression (codegen-able)
-    assert "__z" not in zt.columns and zorder_key(F.lit(1.0), F.lit(1.0)) is not None
-
-
 def test_asof_join_under_adversarial_skew(spark):
     """VERDICT r5 #5: the flagship's one wide exchange is the as-of key
     shuffle, and its docstring waved at skew handling without a test.

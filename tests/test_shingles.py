@@ -203,9 +203,7 @@ def test_remove_duplicate_spans_hot_hash_constant_state(spark):
     )
     out = remove_duplicate_spans(docs, "doc_id", "text", n=8)
 
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" not in plan
     assert "partial_min" in plan and "partial_count" in plan
 

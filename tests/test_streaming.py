@@ -740,6 +740,18 @@ def test_encounters_stream_matches_batch(spark, tmp_path):
     assert got == want
 
 
+def test_route_fixes_ts_column_with_a_space(spark):
+    """The streaming router buckets time through F.col(ts_col): a ts column
+    whose name holds a space routes exactly like the default name."""
+    from pincspark.streaming.encounters import route_fixes
+
+    fixes = _encounter_fixes(spark)
+    want = sorted(map(tuple, route_fixes(fixes).collect()))
+    spaced = fixes.withColumnRenamed("ts", "fix ts")
+    got = sorted(map(tuple, route_fixes(spaced, ts_col="fix ts").collect()))
+    assert got == want and len(got) == 10 * fixes.count()
+
+
 def test_encounters_stream_replay_guard(spark, tmp_path):
     """Re-delivering the same fixes (source-level at-least-once) must not
     duplicate pair events: the state function's first-seen guard drops

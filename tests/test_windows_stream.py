@@ -282,6 +282,28 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     assert got == want == {("a", "2024-01-01 10:30:00"), ("c", "2024-01-01 11:05:00")}
 
 
+def test_interval_join_same_named_and_spaced_ts_columns(spark):
+    """The interval bound is built from the left frame's own ts Column, not
+    pasted into SQL text: both sides may call their event time ``ts``, and
+    a ts column whose name holds a space still resolves."""
+    from datetime import datetime
+
+    from pincspark.streaming.windows import interval_join_stream
+
+    views = [("a", datetime(2024, 1, 1, 10, 0)), ("b", datetime(2024, 1, 1, 10, 5))]
+    clicks = [
+        ("a", datetime(2024, 1, 1, 10, 30)),  # within 1h -> match
+        ("a", datetime(2024, 1, 1, 12, 30)),  # outside
+        ("b", datetime(2024, 1, 1, 10, 4)),  # before the view
+    ]
+    for left_ts, right_ts in (("ts", "ts"), ("view ts", "click ts")):
+        vb = spark.createDataFrame(views, ["u", left_ts])
+        cb = spark.createDataFrame(clicks, ["u", right_ts])
+        joined = interval_join_stream(vb, cb, "u", left_ts, right_ts, within="1 hour")
+        got = {tuple(r) for r in joined.select(vb["u"], cb[right_ts]).collect()}
+        assert got == {("a", datetime(2024, 1, 1, 10, 30))}, (left_ts, right_ts)
+
+
 def test_session_windows_match_python_model_on_random_data(spark):
     """Property: the native session_window aggregation (the q92 gate's
     engine side) matches a pure-Python gap-merge model on random event
