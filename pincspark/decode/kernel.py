@@ -2,6 +2,10 @@
 payload column into the typed ``catalog.DECODED`` struct, plus pure-SQL
 column-expression fast paths for the routing fields (messageType, mmsi) and
 checksum validation so Catalyst can filter/prune BEFORE the Python stage.
+The SQL decode of catalog fields (:func:`decode_sql`) is generated in the
+Spark and DuckDB dialects from the vectorized kernel's bit-layout table
+(``vectorized.VEC_ENTRIES``), over :func:`bitfield_sql` and
+:func:`sixbit_text_sql`.
 
 Scale design: the UDF is the only Python hop in the pipeline; everything
 upstream (checksum filter, type routing) and downstream (family projection,
@@ -21,6 +25,7 @@ from pyspark.sql.functions import pandas_udf
 
 from pincspark.catalog import DECODED, FAMILY_SCHEMAS
 from pincspark.decode.families import decode_message
+from pincspark.decode.vectorized import I, OPT, TEXT, U, VEC_ENTRIES
 from pincspark.functions.nmea import Bits
 
 _TOP_COLS = ["messageType", "repeat", "mmsi", "family"] + list(FAMILY_SCHEMAS)
@@ -129,7 +134,7 @@ def armor_vals_sql(payload_expr: str = "payload") -> str:
     char ONCE into `transform(split(payload, ''), ...)`.
 
     Project this as its own column (`.withColumn("__vals", F.expr(...))`)
-    and pass ``vals="__vals"`` to bitfield/sixbit_text: each field then
+    and pass ``vals="__vals"`` to the SQL generators below: each field then
     costs a couple of element_at nodes instead of re-deriving
     ascii(substring(...)) per covering char. Catalyst will NOT collapse the
     projection into the consumers (CollapseProject refuses to duplicate a
@@ -146,9 +151,16 @@ def bitfield_sql(
     payload_expr: str, start: int, nbits: int, signed: bool = False,
     dialect: str = "duckdb", vals: str | None = None,
 ) -> str:
-    """:func:`bitfield` as a SQL string (dialect 'duckdb' for the oracle,
-    'spark' for F.expr). Identical integer arithmetic (including the
-    too-short-payload NULL guard) so results hash-match across engines."""
+    """P4 as a SQL string for ANY fixed bit span (dialect 'duckdb' for the
+    oracle, 'spark' for F.expr): fold the covering armored chars into one
+    integer, shift/mask/sign-extend. All int64 arithmetic, identical in
+    both dialects so results hash-match across engines. Practical up to
+    ~50-bit fields (the fold value stays within int64).
+
+    NULL when the payload does not cover the span: substring past the end
+    yields '' and ascii('') = 0 would otherwise fold to plausible-looking
+    garbage (the Python kernel clamps instead — callers that want the
+    clamping semantics go through the pandas kernel)."""
     i0, i1 = start // 6, (start + nbits - 1) // 6
     acc = "CAST(0 AS BIGINT)"
     for i in range(i0, i1 + 1):
@@ -161,45 +173,19 @@ def bitfield_sql(
     return f"(CASE WHEN length({payload_expr}) >= {i1 + 1} THEN {val} ELSE NULL END)"
 
 
-def bitfield(
-    payload: Column | str, start: int, nbits: int, signed: bool = False,
-    vals: str | None = None,
-) -> Column:
-    """P4 as a pure column expression for ANY fixed bit span: fold the
-    covering armored chars into one integer, shift/mask/sign-extend. All
-    int64 arithmetic — whole-stage codegen, and portable verbatim to the
-    SQL oracle (see ``bitfield_sql``). Practical up to ~50-bit fields
-    (the fold value stays within int64).
-
-    NULL when the payload does not cover the span: substring past the end
-    yields '' and ascii('') = 0 would otherwise fold to plausible-looking
-    garbage (the Python kernel clamps instead — callers that want the
-    clamping semantics go through the pandas kernel).
-
-    Pass the payload as a STRING column name where possible: the expression
-    is then built as one SQL string -> one F.expr call, instead of
-    thousands of py4j round trips (~100x faster query construction for
-    text-heavy decodes)."""
-    if isinstance(payload, str):
-        return F.expr(bitfield_sql(payload, start, nbits, signed, dialect="spark", vals=vals))
-    i0, i1 = start // 6, (start + nbits - 1) // 6
-    acc: Column = F.lit(0).cast("bigint")
-    for i in range(i0, i1 + 1):
-        acc = acc * F.lit(64) + _char_val(payload, i).cast("bigint")
-    shift = (i1 + 1) * 6 - (start + nbits)
-    val = F.shiftright(acc, shift).bitwiseAND(F.lit((1 << nbits) - 1))
-    if signed:
-        val = F.when(val >= F.lit(1 << (nbits - 1)), val - F.lit(1 << nbits)).otherwise(val)
-    return F.when(F.length(payload) >= i1 + 1, val).otherwise(F.lit(None))
-
-
 def sixbit_text_sql(
     payload_expr: str, start: int, length: int, dialect: str = "duckdb",
     vals: str | None = None,
 ) -> str:
-    """:func:`sixbit_text` as a SQL string (dialect 'duckdb' for the
-    oracle, 'spark' for F.expr) — identical 6-bit-group arithmetic on both
-    engines so text fields hash-match.
+    """P5 (6-bit ASCII text) as a SQL string (dialect 'duckdb' for the
+    oracle, 'spark' for F.expr) — the SQL twin of ``Bits.text``
+    (functions/nmea.py), with identical 6-bit-group arithmetic on both
+    engines so text fields hash-match. Each group maps codes < 32 into
+    '@'..'_', the string truncates at the first '@' padding char, strips,
+    and empty becomes 'Not available'. Groups past the payload end vanish
+    (the Python kernel's clamping loop). Matches the reference's shipName /
+    callsign / destination extraction (ais_parser.py:18-31) minus its
+    '@@@@@' -> 'Not available' quirk (documented divergence, nmea.py:12-18).
 
     The spark dialect builds the char array with higher-order functions
     over the group INDEX (one small lambda regardless of field width)
@@ -207,7 +193,7 @@ def sixbit_text_sql(
     whole-stage-codegen janino compilation PER RUN, while the HOF form
     keeps plans tiny and evaluates in interpreted mode per element —
     microseconds per row, and the right trade for a fixed-width text field
-    (numeric hot fields stay on the unrolled codegen'd ``bitfield`` path).
+    (numeric fields stay on the unrolled codegen'd :func:`bitfield_sql`).
     Pass ``vals`` (see :func:`armor_vals_sql`) so the lambda reads the
     per-row armor array by attribute; without it the armor transform is
     inlined into the lambda and recomputed per element (fine for tests)."""
@@ -258,22 +244,107 @@ def sixbit_text_sql(
     return f"(CASE WHEN {s} = '' THEN 'Not available' ELSE {s} END)"
 
 
-def sixbit_text(payload: str, start: int, length: int, vals: str | None = None) -> Column:
-    """P5 (6-bit ASCII text) as a pure column expression — the SQL twin of
-    ``Bits.text`` (functions/nmea.py): each 6-bit group maps codes < 32 into
-    '@'..'_', the string truncates at the first '@' padding char, strips,
-    and empty becomes 'Not available'. Groups past the payload end vanish
-    (the Python kernel's clamping loop). Matches the reference's shipName /
-    callsign / destination extraction (ais_parser.py:18-31) minus its
-    '@@@@@' -> 'Not available' quirk (documented divergence, nmea.py:12-18).
+class _SqlCond:
+    """A SQL expression the numpy fork masks of ``VEC_ENTRIES`` (e.g.
+    ``lambda u: (u(38, 2) != 0) & (u(8, 30) == 0)``) evaluate over: called
+    with a ``u`` that returns these instead of arrays, a mask lambda builds
+    its own SQL routing condition, so forks are routed from the same table
+    the batch kernel runs."""
 
-    Takes the payload as a column NAME and compiles to one F.expr over a
-    generated SQL string: building a 20-char field out of pyspark Column
-    operators costs thousands of py4j round trips in query construction
-    alone; the SQL string is one call, and the arithmetic (branch-free char
-    mapping, no nested CASE duplication) stays inside whole-stage codegen.
-    Mirrored verbatim by the 'duckdb' dialect for the oracle."""
-    return F.expr(sixbit_text_sql(payload, start, length, dialect="spark", vals=vals))
+    def __init__(self, sql: str):
+        self.sql = sql
+
+    def __eq__(self, k):  # type: ignore[override]
+        return _SqlCond(f"({self.sql} = {k})")
+
+    def __ne__(self, k):  # type: ignore[override]
+        return _SqlCond(f"({self.sql} <> {k})")
+
+    def __and__(self, o):
+        return _SqlCond(f"({self.sql} AND {o.sql})")
+
+    def __or__(self, o):
+        return _SqlCond(f"({self.sql} OR {o.sql})")
+
+    def __invert__(self):
+        return _SqlCond(f"(NOT {self.sql})")
+
+
+def layout_sql(
+    kind: str, start: int, length: int, extra=None, sql_type: str = "bigint",
+    payload_expr: str = "payload", dialect: str = "duckdb", vals: str | None = None,
+) -> str:
+    """One bit-layout row (kind, start, length, extra — the ``VEC_ENTRIES``
+    spec tuple minus its name) as a SQL value of ``sql_type``, a Spark
+    type name both dialects parse. U/I spans go through
+    :func:`bitfield_sql`, TEXT spans through :func:`sixbit_text_sql`, an
+    OPT field reads 0 below its min-total-bits guard. A ("div", x) /
+    ("mul", x) transform runs in double arithmetic when the type is double:
+    ``CAST(v AS DOUBLE) / x``."""
+    if kind == TEXT:
+        return sixbit_text_sql(payload_expr, start, length, dialect, vals)
+    if kind not in (U, I, OPT):
+        raise ValueError(f"no SQL form for a {kind!r} field")
+    v = bitfield_sql(payload_expr, start, length, kind == I, dialect, vals)
+    if kind == OPT:  # extra is the min-total-bits guard, not a transform
+        v = f"(CASE WHEN length({payload_expr}) * 6 >= {extra} THEN {v} ELSE 0 END)"
+        extra = None
+    if sql_type == "double":
+        v = f"CAST({v} AS DOUBLE)"
+    if extra is not None:
+        v = f"{v} {'/' if extra[0] == 'div' else '*'} {extra[1]!r}"
+    return v if sql_type == "double" else f"CAST({v} AS {sql_type})"
+
+
+def routed_sql(
+    branches, payload_expr: str = "payload", dialect: str = "duckdb",
+    vals: str | None = None,
+) -> str:
+    """``CASE`` on messageType over ``(types, condition or None, value)``
+    branches; NULL when no branch matches."""
+    mt = bitfield_sql(payload_expr, 0, 6, dialect=dialect, vals=vals)
+    whens = []
+    for types, cond, value in branches:
+        when = f"{mt} IN ({', '.join(map(str, types))})"
+        whens.append(f"WHEN {when}{f' AND {cond}' if cond else ''} THEN {value}")
+    return f"(CASE {' '.join(whens)} END)"
+
+
+def decode_sql(
+    sources, payload_expr: str = "payload", dialect: str = "duckdb",
+    vals: str | None = None,
+) -> str:
+    """The SQL decode of catalog fields, generated from ``VEC_ENTRIES``.
+    ``sources`` are ``(family, field)`` pairs; the expression is
+    ``decode_payload(p)[family][field]`` of the source whose message types
+    (and, in a forked family, the mask of a fork carrying the field) the
+    payload routes to, NULL when none does. Several sources make one
+    ``CASE`` routed on messageType (a column shared by several families).
+    The output type is the field's ``catalog.FAMILY_SCHEMAS`` type.
+
+    Spans the payload does not cover are NULL, where the Python kernel
+    clamps (divergence D5)."""
+    u = lambda s, n: _SqlCond(bitfield_sql(payload_expr, s, n, dialect=dialect, vals=vals))
+    branches = []
+    for family, field in sources:
+        sql_type = FAMILY_SCHEMAS[family][field].dataType.simpleString()
+        forks = [e for e in VEC_ENTRIES if e[0] == family]
+        by_spec: dict[tuple, list] = {}
+        for _, types, _, mask, specs in forks:
+            for spec in specs:
+                if spec[0] == field:
+                    by_spec.setdefault((types, spec[1:]), []).append(mask)
+        if not by_spec:
+            raise KeyError(f"{family}.{field} has no vector spec")
+        for (types, layout), masks in by_spec.items():
+            # a layout every fork shares routes on messageType alone
+            cond = None
+            if len(masks) < len(forks):
+                conds = [m(u).sql for m in masks]
+                cond = conds[0] if len(conds) == 1 else f"({' OR '.join(conds)})"
+            value = layout_sql(*layout, sql_type, payload_expr, dialect, vals)
+            branches.append((types, cond, value))
+    return routed_sql(branches, payload_expr, dialect, vals)
 
 
 def checksum_valid(sentence: Column) -> Column:

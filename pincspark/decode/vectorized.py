@@ -15,6 +15,11 @@ loop, which stays the single source of truth for semantics —
 ``tests/test_decode.py::test_vectorized_matches_scalar`` pins batch ==
 scalar on the golden corpus and a corruption gauntlet.
 
+The same spec table also generates the catalog's SQL decode:
+``kernel.decode_sql`` turns a (family, field) of ``VEC_ENTRIES`` into a
+Spark or DuckDB expression (fork masks included), which the decode twins
+q31-q34, q49, q94 and q95 and their oracles are built from.
+
 Bit semantics mirror ``functions.nmea.Bits`` exactly, including the
 clamped-read behavior for short payloads: the matrix is zero-padded, so the
 padded value equals the Python value left-shifted by the number of missing

@@ -25,6 +25,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pincspark.decode.kernel import armor_vals_sql, decode_sql, layout_sql, routed_sql
+from pincspark.decode.vectorized import I, TEXT, U, VEC_ENTRIES
 from pincspark.functions import text as TXT
 from pincspark.operators.asof import asof_join
 from pincspark.operators.dedup import (
@@ -1942,60 +1944,100 @@ GROUP BY event_type
 """
 
 
-# Position-report payloads from the golden corpus (types 1/3) + a class-B
-# (type 18 uses different offsets — decoded here with its own spans).
+# --------------------------------------------------------------------------
+# SQL decode twins (q31-q34, q94, q95 and q49 below): each query declares
+# its payload literals and output columns ONCE, and both the Spark frame and
+# the DuckDB oracle are generated from that one column list.
+# --------------------------------------------------------------------------
+
+# A decode column is (name, sql): sql(dialect, vals) is its expression over
+# `payload`. Catalog fields are generated from the kernel's bit-layout table
+# (`_field`); the header and the families with no vector spec (types 12, 14,
+# 15, 16 and 17) keep literal spans (`_span`).
+_ColSql = Callable[[str, str | None], str]
+_DecodeCol = tuple[str, _ColSql]
+
+
+def _field(*sources: str) -> _ColSql:
+    """A catalog field: ``"family.field"`` sources of ``VEC_ENTRIES``, one
+    CASE routed on messageType (``kernel.decode_sql``)."""
+    pairs = [tuple(s.split(".")) for s in sources]
+    return lambda dialect, vals: decode_sql(pairs, "payload", dialect, vals)
+
+
+def _fields(family: str, **cols: str) -> list[_DecodeCol]:
+    """``name=field`` columns of one family."""
+    return [(name, _field(f"{family}.{field}")) for name, field in cols.items()]
+
+
+def _span(sql_type: str, *routes) -> _ColSql:
+    """A literal span: ``routes`` are ``(types, kind, start, length)``,
+    routed on messageType; ``types=None`` is an unrouted header span."""
+
+    def sql(dialect, vals):
+        def val(kind, start, length):
+            return layout_sql(kind, start, length, None, sql_type, "payload", dialect, vals)
+
+        if routes[0][0] is None:
+            return val(*routes[0][1:])
+        branches = [(types, None, val(*layout)) for types, *layout in routes]
+        return routed_sql(branches, "payload", dialect, vals)
+
+    return sql
+
+
+_HEADER: list[_DecodeCol] = [
+    ("message_type", _span("int", (None, U, 0, 6))),
+    ("mmsi", _span("bigint", (None, U, 8, 30))),
+]
+
+
+def _decode_frame(spark: SparkSession, payloads: list[str], cols: list[_DecodeCol]) -> DataFrame:
+    """The Spark side of a decode column list: one armor-value array
+    projection (``kernel.armor_vals_sql``), then one selectExpr."""
+    df = spark.createDataFrame([(p,) for p in payloads], "payload STRING")
+    return df.withColumn("__vals", F.expr(armor_vals_sql("payload"))).selectExpr(
+        "payload", *(f"{sql('spark', '__vals')} AS {name}" for name, sql in cols)
+    )
+
+
+def _decode_oracle(payloads: list[str], cols: list[_DecodeCol]) -> str:
+    """The DuckDB side of a decode column list."""
+    vals = ", ".join(f"('{p}')" for p in payloads)
+    sel = ",\n       ".join(f"{sql('duckdb', None)} AS {name}" for name, sql in cols)
+    return f"""
+SELECT payload,
+       {sel}
+FROM (VALUES {vals}) raw(payload)
+"""
+
+
+# Position-report payloads from the golden corpus (types 1/3).
 POSITION_PAYLOADS = [
     "15R9eN001n7DHvT13w0TBSM>00Rm",
     "37likkpOh27M3ud0Veic9as801i@",
 ]
 
+_Q31_COLS = [
+    *_HEADER,
+    *_fields(
+        "position", nav_status="navStatus", sog="sog", longitude="longitude",
+        latitude="latitude", cog="cog", heading="trueHeading",
+    ),
+]
+
 
 def q31_position_decode_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4/P7 as pure SQL: decode the hot position fields (navStatus, sog,
-    lon, lat, cog, heading) from armored payloads with generated bit-field
-    expressions — no Python, fully codegen, and the oracle runs the
-    IDENTICAL integer arithmetic (tests separately assert SQL == pandas
-    kernel on the same payloads)."""
-    from pincspark.decode.kernel import bitfield
-
-    df = spark.createDataFrame([(p,) for p in POSITION_PAYLOADS], "payload STRING")
-    p = "payload"
-    return df.select(
-        "payload",
-        bitfield(p, 0, 6).cast("int").alias("message_type"),
-        bitfield(p, 8, 30).alias("mmsi"),
-        bitfield(p, 38, 4).cast("int").alias("nav_status"),
-        (bitfield(p, 50, 10).cast("double") / F.lit(10.0)).alias("sog"),
-        (bitfield(p, 61, 28, signed=True).cast("double") / F.lit(600000.0)).alias("longitude"),
-        (bitfield(p, 89, 27, signed=True).cast("double") / F.lit(600000.0)).alias("latitude"),
-        (bitfield(p, 116, 12).cast("double") / F.lit(10.0)).alias("cog"),
-        bitfield(p, 128, 9).cast("int").alias("heading"),
-    )
+    lon, lat, cog, heading) from armored payloads with bit-field
+    expressions generated from the kernel's layout table — no Python,
+    fully codegen. The Spark frame and the oracle are both generated from
+    one column list (tests separately assert SQL == pandas kernel on the
+    same payloads)."""
+    return _decode_frame(spark, POSITION_PAYLOADS, _Q31_COLS)
 
 
-def _q31_oracle() -> str:
-    from pincspark.decode.kernel import bitfield_sql
-
-    vals = ",\n  ".join(f"('{p}')" for p in POSITION_PAYLOADS)
-    b = lambda s, n, sg=False: bitfield_sql("payload", s, n, sg)
-    return f"""
-WITH raw(payload) AS (VALUES
-  {vals}
-)
-SELECT payload,
-       CAST({b(0, 6)} AS INTEGER) AS message_type,
-       {b(8, 30)} AS mmsi,
-       CAST({b(38, 4)} AS INTEGER) AS nav_status,
-       CAST({b(50, 10)} AS DOUBLE) / 10.0 AS sog,
-       CAST({b(61, 28, True)} AS DOUBLE) / 600000.0 AS longitude,
-       CAST({b(89, 27, True)} AS DOUBLE) / 600000.0 AS latitude,
-       CAST({b(116, 12)} AS DOUBLE) / 10.0 AS cog,
-       CAST({b(128, 9)} AS INTEGER) AS heading
-FROM raw
-"""
-
-
-ORACLE_Q31 = _q31_oracle()
+ORACLE_Q31 = _decode_oracle(POSITION_PAYLOADS, _Q31_COLS)
 
 
 # Payloads for the SQL decode twins of the non-position families the
@@ -2008,224 +2050,84 @@ STATIC_VOYAGE_PAYLOAD = (  # type 5, both message parts concatenated
 )
 CLASSB_PAYLOAD = "B8HsF90009nTJO0;Pb803wjTkP06"  # type 18
 LONG_RANGE_PAYLOAD = "K3aDrf9HMh66`Li6"  # type 27 (synthesized)
-STATIC_REPORT_PAYLOADS = [  # type 24 part A, part B
+STATIC_REPORT_PAYLOADS = [  # type 24 part B, part A
     "H7tCijTt00`0000qP=8EPm1pA668",
     "H8HtV6QTF0th@D0000000000000",
+]
+
+_Q32_COLS = [
+    *_HEADER,
+    *_fields(
+        "static_voyage", ais_version="aisVersion", imo="imo",
+        callsign="callsign", ship_name="shipName", ship_type="shipType",
+        to_bow="to_bow", to_stern="to_stern", to_port="to_port",
+        to_starboard="to_starboard", epfd="epfd", eta_month="eta_month",
+        eta_day="eta_day", eta_hour="eta_hour", eta_minute="eta_minute",
+        draught="draught", destination="destination", dte="dte",
+    ),
 ]
 
 
 def q32_static_voyage_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4/P5/P9 as pure SQL: every type-5 static & voyage field — including
     the 6-bit ASCII text fields (callsign, shipName, destination) — decoded
-    with generated column expressions, no Python. Field spans match
-    decode_static_voyage (families.py) == ais_parser.py:113-141; the oracle
-    runs the identical integer/char arithmetic."""
-    from pincspark.decode.kernel import armor_vals_sql, bitfield, sixbit_text
-    from functools import partial
-
-    df = spark.createDataFrame(
-        [(STATIC_VOYAGE_PAYLOAD,)], "payload STRING"
-    ).withColumn("__vals", F.expr(armor_vals_sql("payload")))
-    p = "payload"
-    bitfield = partial(bitfield, vals="__vals")
-    sixbit_text = partial(sixbit_text, vals="__vals")
-    return df.select(
-        "payload",
-        bitfield(p, 0, 6).cast("int").alias("message_type"),
-        bitfield(p, 8, 30).alias("mmsi"),
-        bitfield(p, 38, 2).cast("int").alias("ais_version"),
-        bitfield(p, 40, 30).alias("imo"),
-        sixbit_text(p, 70, 42).alias("callsign"),
-        sixbit_text(p, 112, 120).alias("ship_name"),
-        bitfield(p, 232, 8).cast("int").alias("ship_type"),
-        bitfield(p, 240, 9).cast("int").alias("to_bow"),
-        bitfield(p, 249, 9).cast("int").alias("to_stern"),
-        bitfield(p, 258, 6).cast("int").alias("to_port"),
-        bitfield(p, 264, 6).cast("int").alias("to_starboard"),
-        bitfield(p, 270, 4).cast("int").alias("epfd"),
-        bitfield(p, 274, 4).cast("int").alias("eta_month"),
-        bitfield(p, 278, 5).cast("int").alias("eta_day"),
-        bitfield(p, 283, 5).cast("int").alias("eta_hour"),
-        bitfield(p, 288, 6).cast("int").alias("eta_minute"),
-        (bitfield(p, 294, 8).cast("double") / F.lit(10.0)).alias("draught"),
-        sixbit_text(p, 302, 120).alias("destination"),
-        bitfield(p, 422, 1).cast("int").alias("dte"),
-    )
+    with generated column expressions, no Python. Field spans come from the
+    kernel's layout table, tied to decode_static_voyage (families.py) ==
+    ais_parser.py:113-141; the Spark frame and the oracle are both
+    generated from one column list."""
+    return _decode_frame(spark, [STATIC_VOYAGE_PAYLOAD], _Q32_COLS)
 
 
-def _q32_oracle() -> str:
-    from pincspark.decode.kernel import bitfield_sql, sixbit_text_sql
+ORACLE_Q32 = _decode_oracle([STATIC_VOYAGE_PAYLOAD], _Q32_COLS)
 
-    b = lambda s, n: bitfield_sql("payload", s, n)
-    t = lambda s, n: sixbit_text_sql("payload", s, n)
-    return f"""
-WITH raw(payload) AS (VALUES ('{STATIC_VOYAGE_PAYLOAD}'))
-SELECT payload,
-       CAST({b(0, 6)} AS INTEGER) AS message_type,
-       {b(8, 30)} AS mmsi,
-       CAST({b(38, 2)} AS INTEGER) AS ais_version,
-       {b(40, 30)} AS imo,
-       {t(70, 42)} AS callsign,
-       {t(112, 120)} AS ship_name,
-       CAST({b(232, 8)} AS INTEGER) AS ship_type,
-       CAST({b(240, 9)} AS INTEGER) AS to_bow,
-       CAST({b(249, 9)} AS INTEGER) AS to_stern,
-       CAST({b(258, 6)} AS INTEGER) AS to_port,
-       CAST({b(264, 6)} AS INTEGER) AS to_starboard,
-       CAST({b(270, 4)} AS INTEGER) AS epfd,
-       CAST({b(274, 4)} AS INTEGER) AS eta_month,
-       CAST({b(278, 5)} AS INTEGER) AS eta_day,
-       CAST({b(283, 5)} AS INTEGER) AS eta_hour,
-       CAST({b(288, 6)} AS INTEGER) AS eta_minute,
-       CAST({b(294, 8)} AS DOUBLE) / 10.0 AS draught,
-       {t(302, 120)} AS destination,
-       CAST({b(422, 1)} AS INTEGER) AS dte
-FROM raw
-"""
-
-
-ORACLE_Q32 = _q32_oracle()
+_Q33_COLS = [
+    *_HEADER,
+    ("nav_status", _field("long_range.navStatus")),  # class B has none: NULL
+    *[
+        (name, _field(f"classb.{field}", f"long_range.{field}"))
+        for name, field in (
+            ("longitude", "longitude"), ("latitude", "latitude"), ("sog", "sog"),
+            ("cog", "cog"), ("raim", "raimFlag"),
+        )
+    ],
+]
 
 
 def q33_classb_longrange_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P17/P21 as pure SQL: class-B (18) and long-range (27) position
     reports decoded in ONE scan with a messageType CASE routing to the
     family's bit spans (decode_classb / decode_long_range ==
-    ais_parser.py:541-567 / 684-700). Class B has no navStatus -> NULL."""
-    from pincspark.decode.kernel import bitfield
-
-    df = spark.createDataFrame(
-        [(CLASSB_PAYLOAD,), (LONG_RANGE_PAYLOAD,)], "payload STRING"
-    )
-    p = "payload"
-    mt = bitfield(p, 0, 6)
-
-    def pick(b18, b27):
-        return F.when(mt == 18, b18).otherwise(b27)
-
-    return df.select(
-        "payload",
-        mt.cast("int").alias("message_type"),
-        bitfield(p, 8, 30).alias("mmsi"),
-        F.when(mt == 18, F.lit(None).cast("int"))
-        .otherwise(bitfield(p, 40, 4).cast("int"))
-        .alias("nav_status"),
-        (
-            pick(bitfield(p, 57, 28, True), bitfield(p, 44, 18, True)).cast("double")
-            / F.lit(600000.0)
-        ).alias("longitude"),
-        (
-            pick(bitfield(p, 85, 27, True), bitfield(p, 62, 17, True)).cast("double")
-            / F.lit(600000.0)
-        ).alias("latitude"),
-        (
-            pick(bitfield(p, 46, 10), bitfield(p, 79, 6)).cast("double") / F.lit(10.0)
-        ).alias("sog"),
-        (
-            pick(bitfield(p, 112, 12), bitfield(p, 85, 9)).cast("double") / F.lit(10.0)
-        ).alias("cog"),
-        pick(bitfield(p, 147, 1), bitfield(p, 39, 1)).cast("int").alias("raim"),
-    )
+    ais_parser.py:541-567 / 684-700). Class B has no navStatus -> NULL.
+    The Spark frame and the oracle are both generated from one column
+    list."""
+    return _decode_frame(spark, [CLASSB_PAYLOAD, LONG_RANGE_PAYLOAD], _Q33_COLS)
 
 
-def _q33_oracle() -> str:
-    from pincspark.decode.kernel import bitfield_sql
+ORACLE_Q33 = _decode_oracle([CLASSB_PAYLOAD, LONG_RANGE_PAYLOAD], _Q33_COLS)
 
-    b = lambda s, n, sg=False: bitfield_sql("payload", s, n, sg)
-    mt = b(0, 6)
-    pick = lambda b18, b27: f"(CASE WHEN {mt} = 18 THEN {b18} ELSE {b27} END)"
-    return f"""
-WITH raw(payload) AS (VALUES ('{CLASSB_PAYLOAD}'), ('{LONG_RANGE_PAYLOAD}'))
-SELECT payload,
-       CAST({mt} AS INTEGER) AS message_type,
-       {b(8, 30)} AS mmsi,
-       CAST((CASE WHEN {mt} = 18 THEN NULL ELSE {b(40, 4)} END) AS INTEGER) AS nav_status,
-       CAST({pick(b(57, 28, True), b(44, 18, True))} AS DOUBLE) / 600000.0 AS longitude,
-       CAST({pick(b(85, 27, True), b(62, 17, True))} AS DOUBLE) / 600000.0 AS latitude,
-       CAST({pick(b(46, 10), b(79, 6))} AS DOUBLE) / 10.0 AS sog,
-       CAST({pick(b(112, 12), b(85, 9))} AS DOUBLE) / 10.0 AS cog,
-       CAST({pick(b(147, 1), b(39, 1))} AS INTEGER) AS raim
-FROM raw
-"""
-
-
-ORACLE_Q33 = _q33_oracle()
+_Q34_COLS = [
+    *_HEADER,
+    *_fields(
+        "static_report", part_no="partNo", ship_name="shipName",
+        ship_type="shipType", vendor="vendor", model="model", serial="serial",
+        callsign="callsign", mothership_mmsi="motherShip_mmsi",
+        to_bow="to_bow", to_stern="to_stern", to_port="to_port",
+        to_starboard="to_starboard",
+    ),
+]
 
 
 def q34_static_report_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P20 as pure SQL: type-24 static report with the part A/B fork on
     partNo and the mothership-vs-dimensions fork on mmsi==0
-    (decode_static_report == ais_parser.py:646-680, spec fix D3). Fields
-    outside the taken fork are NULL."""
-    from pincspark.decode.kernel import armor_vals_sql, bitfield, sixbit_text
-    from functools import partial
-
-    df = spark.createDataFrame(
-        [(x,) for x in STATIC_REPORT_PAYLOADS], "payload STRING"
-    ).withColumn("__vals", F.expr(armor_vals_sql("payload")))
-    p = "payload"
-    bitfield = partial(bitfield, vals="__vals")
-    sixbit_text = partial(sixbit_text, vals="__vals")
-    part_no = bitfield(p, 38, 2)
-    mmsi = bitfield(p, 8, 30)
-    is_a = part_no == 0
-
-    def b_only(cond, col):
-        return F.when(cond, col).otherwise(F.lit(None))
-
-    return df.select(
-        "payload",
-        bitfield(p, 0, 6).cast("int").alias("message_type"),
-        mmsi.alias("mmsi"),
-        part_no.cast("int").alias("part_no"),
-        b_only(is_a, sixbit_text(p, 40, 120)).cast("string").alias("ship_name"),
-        b_only(~is_a, bitfield(p, 40, 8)).cast("int").alias("ship_type"),
-        b_only(~is_a, sixbit_text(p, 48, 18)).cast("string").alias("vendor"),
-        b_only(~is_a, bitfield(p, 66, 4)).cast("int").alias("model"),
-        b_only(~is_a, bitfield(p, 70, 20)).alias("serial"),
-        b_only(~is_a, sixbit_text(p, 90, 42)).cast("string").alias("callsign"),
-        b_only(~is_a & (mmsi == 0), bitfield(p, 132, 30)).alias("mothership_mmsi"),
-        b_only(~is_a & (mmsi != 0), bitfield(p, 132, 9)).cast("int").alias("to_bow"),
-        b_only(~is_a & (mmsi != 0), bitfield(p, 141, 9)).cast("int").alias("to_stern"),
-        b_only(~is_a & (mmsi != 0), bitfield(p, 150, 6)).cast("int").alias("to_port"),
-        b_only(~is_a & (mmsi != 0), bitfield(p, 156, 6)).cast("int").alias("to_starboard"),
-    )
+    (decode_static_report == ais_parser.py:646-680, spec fix D3), both
+    routed by the layout table's own fork masks. Fields outside the taken
+    fork are NULL. The Spark frame and the oracle are both generated from
+    one column list."""
+    return _decode_frame(spark, STATIC_REPORT_PAYLOADS, _Q34_COLS)
 
 
-def _q34_oracle() -> str:
-    from pincspark.decode.kernel import bitfield_sql, sixbit_text_sql
-
-    b = lambda s, n: bitfield_sql("payload", s, n)
-    t = lambda s, n: sixbit_text_sql("payload", s, n)
-    part = b(38, 2)
-    mmsi = b(8, 30)
-    only = lambda cond, e: f"(CASE WHEN {cond} THEN {e} ELSE NULL END)"
-    is_b = f"{part} <> 0"
-    vals = ",\n  ".join(f"('{x}')" for x in STATIC_REPORT_PAYLOADS)
-    return f"""
-WITH raw(payload) AS (VALUES
-  {vals}
-)
-SELECT payload,
-       CAST({b(0, 6)} AS INTEGER) AS message_type,
-       {mmsi} AS mmsi,
-       CAST({part} AS INTEGER) AS part_no,
-       {only(f"{part} = 0", t(40, 120))} AS ship_name,
-       CAST({only(is_b, b(40, 8))} AS INTEGER) AS ship_type,
-       {only(is_b, t(48, 18))} AS vendor,
-       CAST({only(is_b, b(66, 4))} AS INTEGER) AS model,
-       {only(is_b, b(70, 20))} AS serial,
-       {only(is_b, t(90, 42))} AS callsign,
-       {only(f"{is_b} AND {mmsi} = 0", b(132, 30))} AS mothership_mmsi,
-       CAST({only(f"{is_b} AND {mmsi} <> 0", b(132, 9))} AS INTEGER) AS to_bow,
-       CAST({only(f"{is_b} AND {mmsi} <> 0", b(141, 9))} AS INTEGER) AS to_stern,
-       CAST({only(f"{is_b} AND {mmsi} <> 0", b(150, 6))} AS INTEGER) AS to_port,
-       CAST({only(f"{is_b} AND {mmsi} <> 0", b(156, 6))} AS INTEGER) AS to_starboard
-FROM raw
-"""
-
-
-ORACLE_Q34 = _q34_oracle()
+ORACLE_Q34 = _decode_oracle(STATIC_REPORT_PAYLOADS, _Q34_COLS)
 
 
 # Payloads for the q94/q95 SQL decode twins of the LAST local-only decode
@@ -2248,10 +2150,36 @@ CLASSB_EXT_PAYLOAD = (  # type 19 (golden)
 ATON_PAYLOAD = "ENm>OAt:0W5:W3h9PTVPh1:Wdh@4=lSP1<j4000003v010"  # type 21 (golden)
 
 # 6*len(payload): text spans that run to end-of-payload are per-literal
-# constants mirrored verbatim into the oracle.
+# constants.
 _NB12 = 6 * len(SAFETY_ADDRESSED_PAYLOAD)
 _NB14 = 6 * len(SAFETY_BROADCAST_PAYLOAD)
 _NB17 = 6 * len(DGNSS_PAYLOAD)
+
+_Q94_PAYLOADS = [
+    BASE_STATION_PAYLOAD, SAR_AIRCRAFT_PAYLOAD, INTERROGATION_PAYLOAD,
+    ASSIGNMENT_PAYLOAD, DGNSS_PAYLOAD,
+]
+_Q94_COLS = [
+    *_HEADER,
+    *_fields(
+        "base_station", utc_year="utc_year", utc_month="utc_month",
+        utc_day="utc_day", utc_hour="utc_hour", utc_minute="utc_minute",
+        utc_second="utc_second", epfd="epfd",
+    ),
+    *_fields("sar_aircraft", altitude="altitude", sog="sog", cog="cog"),
+    ("longitude", _field("base_station.longitude", "sar_aircraft.longitude")),
+    ("latitude", _field("base_station.latitude", "sar_aircraft.latitude")),
+    # types 15/16/17: no vector spec (interrogation mmsi1/type1_1/
+    # offset1_1/mmsi2, assignment mmsi1/offset1/increment1/mmsi2, DGNSS)
+    ("dest_mmsi", _span("bigint", ((15, 16), U, 40, 30))),
+    ("itype1", _span("int", ((15,), U, 70, 6))),
+    ("offset1", _span("int", ((15,), U, 76, 12), ((16,), U, 70, 12))),
+    ("increment1", _span("int", ((16,), U, 82, 10))),
+    ("mmsi2", _span("bigint", ((15,), U, 110, 30), ((16,), U, 92, 30))),
+    ("dgnss_lon", _span("int", ((17,), I, 40, 18))),
+    ("dgnss_lat", _span("int", ((17,), I, 58, 17))),
+    ("dgnss_data", _span("string", ((17,), TEXT, 80, _NB17 - 80))),
+]
 
 
 def q94_aux_families_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2262,247 +2190,53 @@ def q94_aux_families_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode_assignment / decode_dgnss == ais_parser.py:76-110, 445-472,
     496-510, 524, 528-537; type 16 keeps the fields the reference decodes
     then drops — divergence D1). Fields outside the routed family are
-    NULL; DGNSS lon/lat stay unscaled ints per the reference. The oracle
-    runs identical integer arithmetic."""
-    from pincspark.decode.kernel import bitfield, sixbit_text
-
-    df = spark.createDataFrame(
-        [
-            (BASE_STATION_PAYLOAD,),
-            (SAR_AIRCRAFT_PAYLOAD,),
-            (INTERROGATION_PAYLOAD,),
-            (ASSIGNMENT_PAYLOAD,),
-            (DGNSS_PAYLOAD,),
-        ],
-        "payload STRING",
-    )
-    p = "payload"
-    mt = bitfield(p, 0, 6)
-
-    def only(types, col):
-        # un-terminated when: unmatched rows are NULL, and the result still
-        # accepts further .when(...) branches for two-family columns
-        cond = mt == types if isinstance(types, int) else mt.isin(*types)
-        return F.when(cond, col)
-
-    return df.select(
-        "payload",
-        mt.cast("int").alias("message_type"),
-        bitfield(p, 8, 30).alias("mmsi"),
-        only(4, bitfield(p, 38, 14)).cast("int").alias("utc_year"),
-        only(4, bitfield(p, 52, 4)).cast("int").alias("utc_month"),
-        only(4, bitfield(p, 56, 5)).cast("int").alias("utc_day"),
-        only(4, bitfield(p, 61, 5)).cast("int").alias("utc_hour"),
-        only(4, bitfield(p, 66, 6)).cast("int").alias("utc_minute"),
-        only(4, bitfield(p, 72, 6)).cast("int").alias("utc_second"),
-        only(4, bitfield(p, 134, 4)).cast("int").alias("epfd"),
-        only(9, bitfield(p, 38, 12)).cast("int").alias("altitude"),
-        (only(9, bitfield(p, 50, 10)).cast("double") / F.lit(10.0)).alias("sog"),
-        (only(9, bitfield(p, 116, 12)).cast("double") / F.lit(10.0)).alias("cog"),
-        (
-            only(4, bitfield(p, 79, 28, True))
-            .when(mt == 9, bitfield(p, 61, 28, True))
-            .cast("double")
-            / F.lit(600000.0)
-        ).alias("longitude"),
-        (
-            only(4, bitfield(p, 107, 27, True))
-            .when(mt == 9, bitfield(p, 89, 27, True))
-            .cast("double")
-            / F.lit(600000.0)
-        ).alias("latitude"),
-        only((15, 16), bitfield(p, 40, 30)).alias("dest_mmsi"),
-        only(15, bitfield(p, 70, 6)).cast("int").alias("itype1"),
-        only(15, bitfield(p, 76, 12))
-        .when(mt == 16, bitfield(p, 70, 12))
-        .cast("int")
-        .alias("offset1"),
-        only(16, bitfield(p, 82, 10)).cast("int").alias("increment1"),
-        only(15, bitfield(p, 110, 30))
-        .when(mt == 16, bitfield(p, 92, 30))
-        .alias("mmsi2"),
-        only(17, bitfield(p, 40, 18, True)).cast("int").alias("dgnss_lon"),
-        only(17, bitfield(p, 58, 17, True)).cast("int").alias("dgnss_lat"),
-        only(17, sixbit_text(p, 80, _NB17 - 80)).cast("string").alias("dgnss_data"),
-    )
+    NULL; DGNSS lon/lat stay unscaled ints per the reference. The Spark
+    frame and the oracle are both generated from one column list."""
+    return _decode_frame(spark, _Q94_PAYLOADS, _Q94_COLS)
 
 
-def _q94_oracle() -> str:
-    from pincspark.decode.kernel import bitfield_sql, sixbit_text_sql
+ORACLE_Q94 = _decode_oracle(_Q94_PAYLOADS, _Q94_COLS)
 
-    b = lambda s, n, sg=False: bitfield_sql("payload", s, n, sg)
-    mt = b(0, 6)
-    only = lambda types, e: (
-        f"(CASE WHEN {mt} IN ({', '.join(map(str, types))}) THEN {e} ELSE NULL END)"
-    )
-    pick2 = lambda t1, e1, t2, e2: (
-        f"(CASE WHEN {mt} = {t1} THEN {e1} WHEN {mt} = {t2} THEN {e2} "
-        "ELSE NULL END)"
-    )
-    vals = ",\n  ".join(
-        f"('{x}')"
-        for x in (
-            BASE_STATION_PAYLOAD,
-            SAR_AIRCRAFT_PAYLOAD,
-            INTERROGATION_PAYLOAD,
-            ASSIGNMENT_PAYLOAD,
-            DGNSS_PAYLOAD,
-        )
-    )
-    return f"""
-WITH raw(payload) AS (VALUES
-  {vals}
-)
-SELECT payload,
-       CAST({mt} AS INTEGER) AS message_type,
-       {b(8, 30)} AS mmsi,
-       CAST({only((4,), b(38, 14))} AS INTEGER) AS utc_year,
-       CAST({only((4,), b(52, 4))} AS INTEGER) AS utc_month,
-       CAST({only((4,), b(56, 5))} AS INTEGER) AS utc_day,
-       CAST({only((4,), b(61, 5))} AS INTEGER) AS utc_hour,
-       CAST({only((4,), b(66, 6))} AS INTEGER) AS utc_minute,
-       CAST({only((4,), b(72, 6))} AS INTEGER) AS utc_second,
-       CAST({only((4,), b(134, 4))} AS INTEGER) AS epfd,
-       CAST({only((9,), b(38, 12))} AS INTEGER) AS altitude,
-       CAST({only((9,), b(50, 10))} AS DOUBLE) / 10.0 AS sog,
-       CAST({only((9,), b(116, 12))} AS DOUBLE) / 10.0 AS cog,
-       CAST({pick2(4, b(79, 28, True), 9, b(61, 28, True))} AS DOUBLE)
-         / 600000.0 AS longitude,
-       CAST({pick2(4, b(107, 27, True), 9, b(89, 27, True))} AS DOUBLE)
-         / 600000.0 AS latitude,
-       {only((15, 16), b(40, 30))} AS dest_mmsi,
-       CAST({only((15,), b(70, 6))} AS INTEGER) AS itype1,
-       CAST({pick2(15, b(76, 12), 16, b(70, 12))} AS INTEGER) AS offset1,
-       CAST({only((16,), b(82, 10))} AS INTEGER) AS increment1,
-       {pick2(15, b(110, 30), 16, b(92, 30))} AS mmsi2,
-       CAST({only((17,), b(40, 18, True))} AS INTEGER) AS dgnss_lon,
-       CAST({only((17,), b(58, 17, True))} AS INTEGER) AS dgnss_lat,
-       {only((17,), sixbit_text_sql("payload", 80, _NB17 - 80))} AS dgnss_data
-FROM raw
-"""
-
-
-ORACLE_Q94 = _q94_oracle()
+_Q95_PAYLOADS = [
+    SAFETY_ADDRESSED_PAYLOAD, SAFETY_BROADCAST_PAYLOAD, CLASSB_EXT_PAYLOAD,
+    ATON_PAYLOAD,
+]
+_Q95_COLS = [
+    *_HEADER,
+    # types 12/14: no vector spec (safety seqNo/dest_mmsi/text)
+    ("seq_no", _span("int", ((12,), U, 38, 2))),
+    ("dest_mmsi", _span("bigint", ((12,), U, 40, 30))),
+    (
+        "safety_text",
+        _span("string", ((12,), TEXT, 72, _NB12 - 72), ((14,), TEXT, 40, _NB14 - 40)),
+    ),
+    ("name_text", _field("classb_ext.shipName", "aton.aidName")),
+    ("ship_type", _field("classb_ext.shipType")),
+    ("aid_type", _field("aton.aidType")),
+    ("sog", _field("classb_ext.sog")),
+    ("longitude", _field("classb_ext.longitude", "aton.longitude")),
+    ("latitude", _field("classb_ext.latitude", "aton.latitude")),
+    ("heading", _field("classb_ext.trueHeading")),
+    ("to_bow", _field("classb_ext.to_bow", "aton.to_bow")),
+    ("virtual_aid", _field("aton.virtualAid")),
+    ("utc_second", _field("aton.utc_second")),
+]
 
 
 def q95_text_families_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P13/P18/P19 as pure SQL: addressed/broadcast safety text (12/14),
     extended Class B (19) and aid-to-navigation (21) decoded in ONE scan —
-    the variable-length safety/ext text spans are per-literal constants
-    mirrored into the oracle, the fixed-width name fields ride the HOF
-    sixbit path (decode_safety / decode_classb_ext / decode_aton ==
-    ais_parser.py:475-492, 571-605, 608-642). Fields outside the routed
-    family are NULL. With q94 this retires the last local-only decode
-    families (VERDICT r10 rows P8/P12-P16/P18/P19)."""
-    from pincspark.decode.kernel import armor_vals_sql, bitfield, sixbit_text
-    from functools import partial
-
-    df = spark.createDataFrame(
-        [
-            (SAFETY_ADDRESSED_PAYLOAD,),
-            (SAFETY_BROADCAST_PAYLOAD,),
-            (CLASSB_EXT_PAYLOAD,),
-            (ATON_PAYLOAD,),
-        ],
-        "payload STRING",
-    ).withColumn("__vals", F.expr(armor_vals_sql("payload")))
-    p = "payload"
-    bitfield = partial(bitfield, vals="__vals")
-    sixbit_text = partial(sixbit_text, vals="__vals")
-    mt = bitfield(p, 0, 6)
-
-    def only(types, col):
-        # un-terminated when: unmatched rows are NULL, and the result still
-        # accepts further .when(...) branches for two-family columns
-        cond = mt == types if isinstance(types, int) else mt.isin(*types)
-        return F.when(cond, col)
-
-    return df.select(
-        "payload",
-        mt.cast("int").alias("message_type"),
-        bitfield(p, 8, 30).alias("mmsi"),
-        only(12, bitfield(p, 38, 2)).cast("int").alias("seq_no"),
-        only(12, bitfield(p, 40, 30)).alias("dest_mmsi"),
-        only(12, sixbit_text(p, 72, _NB12 - 72))
-        .when(mt == 14, sixbit_text(p, 40, _NB14 - 40))
-        .cast("string")
-        .alias("safety_text"),
-        only(19, sixbit_text(p, 143, 120))
-        .when(mt == 21, sixbit_text(p, 43, 120))
-        .cast("string")
-        .alias("name_text"),
-        only(19, bitfield(p, 263, 8)).cast("int").alias("ship_type"),
-        only(21, bitfield(p, 38, 5)).cast("int").alias("aid_type"),
-        (only(19, bitfield(p, 46, 10)).cast("double") / F.lit(10.0)).alias("sog"),
-        (
-            only(19, bitfield(p, 57, 28, True))
-            .when(mt == 21, bitfield(p, 164, 28, True))
-            .cast("double")
-            / F.lit(600000.0)
-        ).alias("longitude"),
-        (
-            only(19, bitfield(p, 85, 27, True))
-            .when(mt == 21, bitfield(p, 192, 27, True))
-            .cast("double")
-            / F.lit(600000.0)
-        ).alias("latitude"),
-        only(19, bitfield(p, 124, 9)).cast("int").alias("heading"),
-        only(19, bitfield(p, 271, 9))
-        .when(mt == 21, bitfield(p, 219, 9))
-        .cast("int")
-        .alias("to_bow"),
-        only(21, bitfield(p, 269, 1)).cast("int").alias("virtual_aid"),
-        only(21, bitfield(p, 253, 6)).cast("int").alias("utc_second"),
-    )
+    the variable-length safety text spans are per-literal constants, the
+    fixed-width name fields ride the HOF sixbit path (decode_safety /
+    decode_classb_ext / decode_aton == ais_parser.py:475-492, 571-605,
+    608-642). Fields outside the routed family are NULL. The Spark frame
+    and the oracle are both generated from one column list. With q94 this
+    retires the last local-only decode families (VERDICT r10 rows
+    P8/P12-P16/P18/P19)."""
+    return _decode_frame(spark, _Q95_PAYLOADS, _Q95_COLS)
 
 
-def _q95_oracle() -> str:
-    from pincspark.decode.kernel import bitfield_sql, sixbit_text_sql
-
-    b = lambda s, n, sg=False: bitfield_sql("payload", s, n, sg)
-    t = lambda s, n: sixbit_text_sql("payload", s, n)
-    mt = b(0, 6)
-    only = lambda ty, e: f"(CASE WHEN {mt} = {ty} THEN {e} ELSE NULL END)"
-    pick2 = lambda t1, e1, t2, e2: (
-        f"(CASE WHEN {mt} = {t1} THEN {e1} WHEN {mt} = {t2} THEN {e2} "
-        "ELSE NULL END)"
-    )
-    vals = ",\n  ".join(
-        f"('{x}')"
-        for x in (
-            SAFETY_ADDRESSED_PAYLOAD,
-            SAFETY_BROADCAST_PAYLOAD,
-            CLASSB_EXT_PAYLOAD,
-            ATON_PAYLOAD,
-        )
-    )
-    return f"""
-WITH raw(payload) AS (VALUES
-  {vals}
-)
-SELECT payload,
-       CAST({mt} AS INTEGER) AS message_type,
-       {b(8, 30)} AS mmsi,
-       CAST({only(12, b(38, 2))} AS INTEGER) AS seq_no,
-       {only(12, b(40, 30))} AS dest_mmsi,
-       {pick2(12, t(72, _NB12 - 72), 14, t(40, _NB14 - 40))} AS safety_text,
-       {pick2(19, t(143, 120), 21, t(43, 120))} AS name_text,
-       CAST({only(19, b(263, 8))} AS INTEGER) AS ship_type,
-       CAST({only(21, b(38, 5))} AS INTEGER) AS aid_type,
-       CAST({only(19, b(46, 10))} AS DOUBLE) / 10.0 AS sog,
-       CAST({pick2(19, b(57, 28, True), 21, b(164, 28, True))} AS DOUBLE)
-         / 600000.0 AS longitude,
-       CAST({pick2(19, b(85, 27, True), 21, b(192, 27, True))} AS DOUBLE)
-         / 600000.0 AS latitude,
-       CAST({only(19, b(124, 9))} AS INTEGER) AS heading,
-       CAST({pick2(19, b(271, 9), 21, b(219, 9))} AS INTEGER) AS to_bow,
-       CAST({only(21, b(269, 1))} AS INTEGER) AS virtual_aid,
-       CAST({only(21, b(253, 6))} AS INTEGER) AS utc_second
-FROM raw
-"""
-
-
-ORACLE_Q95 = _q95_oracle()
+ORACLE_Q95 = _decode_oracle(_Q95_PAYLOADS, _Q95_COLS)
 
 
 # The enums exercised through the broadcast-join path (J4) vs the scalar
@@ -5598,48 +5332,17 @@ WEATHER_PAYLOADS = [
     "876qich0Gjuqw02N=3p7Wt3wP1wp2001Owwt003wwwwvl00?s?wwP3wwowP0",
 ]
 
-# (column, start bit, width, signed) for every integer met-hydro field of the
-# IMO289 weather report — spans == decode_type8 (families.py) ==
+# Every field of the layout table's DAC1/FID31 fork, in layout order: dac,
+# fid, the /60000 lon/lat (not the position report's /600000) and the 35
+# integer met-hydro fields == decode_type8 (families.py) ==
 # ais_parser.py:143-221 (incl. the reference's quirk of decoding
-# avgWindSpeed/windGust as SIGNED 7-bit). lon/lat are handled separately
-# (the /60000.0 25/24-bit variant, not the position report's /600000.0).
-WEATHER_SPANS: list[tuple[str, int, int, bool]] = [
-    ("positionAccuracy", 105, 1, False),
-    ("utc_day", 106, 5, False),
-    ("utc_hour", 111, 5, False),
-    ("utc_minute", 116, 6, False),
-    ("avgWindSpeed", 122, 7, True),
-    ("windGust", 129, 7, True),
-    ("windDirection", 136, 9, False),
-    ("windGustDirection", 145, 9, False),
-    ("airTemperature", 154, 11, True),
-    ("relativeHumidity", 165, 7, False),
-    ("dewpoint", 172, 10, True),
-    ("airPressure", 182, 9, False),
-    ("airPressureTendency", 191, 2, False),
-    ("horizontalVisibility", 193, 8, False),
-    ("waterLevel", 201, 12, False),
-    ("waterLevelTrend", 213, 2, False),
-    ("surfaceCurrentSpeed", 215, 8, False),
-    ("surfaceCurrentDirection", 223, 9, False),
-    ("surfaceCurrentSpeed_2", 232, 8, False),
-    ("surfaceCurrentDirection_2", 240, 9, False),
-    ("CurrentMeasureLevel_2", 249, 5, False),
-    ("surfaceCurrentSpeed_3", 254, 8, False),
-    ("surfaceCurrentDirection_3", 262, 9, False),
-    ("CurrentMeasureLevel_3", 271, 5, False),
-    ("significantWaveHeight", 276, 8, False),
-    ("wavePeriod", 284, 6, False),
-    ("waveDirection", 290, 9, False),
-    ("swellHeight", 299, 8, False),
-    ("swellPeriod", 307, 6, False),
-    ("swellDirection", 313, 9, False),
-    ("seaState", 322, 4, False),
-    ("waterTemperature", 326, 10, False),
-    ("precipitation", 336, 3, False),
-    ("salinity", 339, 9, False),
-    ("ice", 348, 2, False),
-]
+# avgWindSpeed/windGust as SIGNED 7-bit).
+_WEATHER_FIELDS = next(
+    [spec[0] for spec in specs]
+    for family, _, _, _, specs in VEC_ENTRIES
+    if family == "bin_broadcast" and any(spec[0] == "airTemperature" for spec in specs)
+)
+_Q49_COLS = [*_HEADER, *[(f, _field(f"bin_broadcast.{f}")) for f in _WEATHER_FIELDS]]
 
 _POS_ACC_0 = "an unaugmented GNSS fix with accuracy > 10m"
 _POS_ACC_1 = "a DGPS-quality fix with an accuracy of < 10ms"
@@ -5647,32 +5350,15 @@ _POS_ACC_1 = "a DGPS-quality fix with an accuracy of < 10ms"
 
 def q49_weather_decode_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P11 as pure SQL: the full DAC1/FID31 met-hydro report — the widest
-    decoder in the reference (ais_parser.py:143-221) — as generated
-    bit-field column expressions over the armor-value array, plus the five
-    enum description strings (P22/P23) and the positionAccuracy conditional,
-    all from the same span/enum tables the Python kernel uses. No Python at
-    run time; the oracle runs the identical integer arithmetic."""
-    from pincspark.decode.kernel import armor_vals_sql, bitfield
+    decoder in the reference (ais_parser.py:143-221) — as bit-field column
+    expressions generated from the kernel's layout table over the
+    armor-value array, plus the five enum description strings (P22/P23) and
+    the positionAccuracy conditional from the same enum tables the Python
+    kernel uses. No Python at run time; the decoded columns of the Spark
+    frame and the oracle are both generated from one column list."""
     from pincspark.functions.enums import WEATHER_DESCS, lookup
 
-    df = spark.createDataFrame(
-        [(p,) for p in WEATHER_PAYLOADS], "payload STRING"
-    ).withColumn("__vals", F.expr(armor_vals_sql("payload")))
-    p = "payload"
-    b = lambda s, n, sg=False: bitfield(p, s, n, sg, vals="__vals")
-    out = df.select(
-        "payload",
-        b(0, 6).cast("int").alias("message_type"),
-        b(8, 30).alias("mmsi"),
-        b(40, 10).cast("int").alias("dac"),
-        b(50, 6).cast("int").alias("fid"),
-        (b(56, 25, True).cast("double") / F.lit(60000.0)).alias("longitude"),
-        (b(81, 24, True).cast("double") / F.lit(60000.0)).alias("latitude"),
-        *[
-            b(s, n, sg).cast("int").alias(name)
-            for name, s, n, sg in WEATHER_SPANS
-        ],
-    )
+    out = _decode_frame(spark, WEATHER_PAYLOADS, _Q49_COLS)
     out = out.withColumn(
         "positionAccuracyDesc",
         F.when(F.col("positionAccuracy") == 0, F.lit(_POS_ACC_0)).otherwise(
@@ -5685,39 +5371,18 @@ def q49_weather_decode_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q49_oracle() -> str:
-    from pincspark.decode.kernel import bitfield_sql
     from pincspark.functions.enums import WEATHER_DESCS, lookup_sql
 
-    vals = ",\n  ".join(f"('{p}')" for p in WEATHER_PAYLOADS)
-    b = lambda s, n, sg=False: bitfield_sql("payload", s, n, sg)
-    fields = ",\n       ".join(
-        f"CAST({b(s, n, sg)} AS INTEGER) AS {name}"
-        for name, s, n, sg in WEATHER_SPANS
-    )
     descs = ",\n       ".join(
         f"{lookup_sql(enum_name, code_col)} AS {desc_col}"
         for code_col, enum_name, desc_col in WEATHER_DESCS
     )
     return f"""
-WITH raw(payload) AS (VALUES
-  {vals}
-),
-dec AS (
-SELECT payload,
-       CAST({b(0, 6)} AS INTEGER) AS message_type,
-       {b(8, 30)} AS mmsi,
-       CAST({b(40, 10)} AS INTEGER) AS dac,
-       CAST({b(50, 6)} AS INTEGER) AS fid,
-       CAST({b(56, 25, True)} AS DOUBLE) / 60000.0 AS longitude,
-       CAST({b(81, 24, True)} AS DOUBLE) / 60000.0 AS latitude,
-       {fields}
-FROM raw
-)
 SELECT *,
        CASE WHEN positionAccuracy = 0 THEN '{_POS_ACC_0}'
             ELSE '{_POS_ACC_1}' END AS positionAccuracyDesc,
        {descs}
-FROM dec
+FROM ({_decode_oracle(WEATHER_PAYLOADS, _Q49_COLS)}) decoded
 """
 
 

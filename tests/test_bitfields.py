@@ -109,3 +109,62 @@ def test_duckdb_sixbit_text_matches_kernel(payload, start, ngroups):
     length = 6 * ngroups
     got = _duck_scalar(sixbit_text_sql("payload", start, length), payload)
     assert got == Bits.from_payload(payload).text(start, length)
+
+
+def test_spark_dialect_matches_duckdb_and_kernel(spark):
+    """The Spark dialect of bitfield_sql / sixbit_text_sql — what every
+    catalog decode twin runs — equals the DuckDB dialect and Bits on seeded
+    random payload x span cases, with and without the per-row armor-value
+    array (``vals``): one Spark job and one DuckDB query over all cases. A
+    bit span is compared with Bits where the payload covers it (NULL on
+    both engines otherwise); text always."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from pincspark.decode.kernel import armor_vals_sql
+
+    rng = random.Random(31)
+    payloads = [
+        "".join(rng.choice(ARMORING) for _ in range(rng.randint(1, 30)))
+        for _ in range(20)
+    ]
+    cases = {}  # column -> (kind, start, width, signed)
+    for k in range(20):
+        cases[f"b{k}"] = ("bits", rng.randint(0, 120), rng.randint(1, 50), rng.random() < 0.5)
+    for k in range(10):
+        cases[f"t{k}"] = ("text", rng.randint(0, 120), 6 * rng.randint(1, 20), False)
+
+    def sql(case, dialect, vals=None):
+        kind, start, width, signed = case
+        if kind == "bits":
+            return bitfield_sql("payload", start, width, signed, dialect, vals)
+        return sixbit_text_sql("payload", start, width, dialect, vals)
+
+    df = spark.createDataFrame([(p,) for p in payloads], "payload STRING")
+    df = df.withColumn("__vals", F.expr(armor_vals_sql("payload"))).select(
+        "payload",
+        *[F.expr(sql(c, "spark")).alias(f"{n}_plain") for n, c in cases.items()],
+        *[F.expr(sql(c, "spark", "__vals")).alias(f"{n}_vals") for n, c in cases.items()],
+    )
+    spark_rows = {r["payload"]: r for r in df.collect()}
+    values = ", ".join(f"('{p}')" for p in payloads)
+    cols = ", ".join(f"{sql(c, 'duckdb')} AS {n}" for n, c in cases.items())
+    duck = _DUCK.sql(f"SELECT payload, {cols} FROM (VALUES {values}) t(payload)")
+    names = [d[0] for d in duck.description]
+
+    covered = 0
+    for row in duck.fetchall():
+        d = dict(zip(names, row))
+        s = spark_rows[d["payload"]]
+        b = Bits.from_payload(d["payload"])
+        for n, (kind, start, width, signed) in cases.items():
+            assert s[f"{n}_plain"] == s[f"{n}_vals"] == d[n], (d["payload"], n)
+            if kind == "text":
+                assert d[n] == b.text(start, width), (d["payload"], n)
+            elif start + width <= b.nbits:
+                assert d[n] == (b.i(start, width) if signed else b.u(start, width))
+                covered += 1
+            else:
+                assert d[n] is None
+    assert covered >= 100
